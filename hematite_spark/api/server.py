@@ -94,6 +94,9 @@ def _jsonapi_error(status: int, title: str, detail: str) -> dict[str, Any]:
 class _Handler(BaseHTTPRequestHandler):
     server: "HematiteServer"
     protocol_version = "HTTP/1.1"
+    # headers and body go out in two writes; with Nagle on, the body
+    # waits for the client's delayed ACK (~40 ms per keep-alive response)
+    disable_nagle_algorithm = True
 
     # -- plumbing ------------------------------------------------------
 

@@ -26,18 +26,22 @@ would dominate latency; the files it writes are plain parquet in the
 table's partition layout, so every Spark read path (batch or
 streaming file source) consumes them natively with pruning intact.
 At cluster scale the same design holds: appends land as small
-parquet files per micro-batch (e.g. via Structured Streaming
-``foreachBatch`` → this API, see streaming/append.py), commit
-serialization stays per-stream, and compaction (``compact_stream``)
-folds small files into sorted large ones so scans stay efficient.
+parquet files per micro-batch (Structured Streaming executors call
+``append_new``, see streaming/append.py), commit serialization stays
+per-stream, and compaction (``compact_stream``) folds small files
+into sorted large ones so scans stay efficient. This module is the
+only one that names store files, takes stream locks or compacts.
 Writer serialization is two-level: the in-process RLock per stream
-(the reference's tokio mutex, server.rs:58,184) plus an exclusive
-``flock`` on ``<stream_dir>/.lock`` held across the append critical
-section, so multiple EventStore instances on shared storage
-serialize appends and the OCC gate judges the authoritative on-disk
-state (``_refresh_if_changed``). On a cluster the flock member of
-the family is replaced by a lock service or Delta-style transaction
-log; the API and the gate semantics are unchanged.
+(the reference's tokio mutex, server.rs:58,184) plus the store's
+``LockProvider`` (``flock`` on ``<stream_dir>/.lock`` by default, or
+a TTL lease) held across the append critical section, so multiple
+EventStore instances on shared storage serialize appends and the OCC
+gate judges the authoritative on-disk state
+(``_refresh_if_changed``). Streaming writers build their EventStore
+with the same provider, so they serialize against interactive
+writers the same way. On a cluster the provider is replaced by a
+lock service or Delta-style transaction log; the API and the gate
+semantics are unchanged.
 
 Scale notes (100 TB design point): tenant/stream partitioning keeps
 point and range reads pruned to one directory regardless of table
@@ -56,7 +60,7 @@ import os
 import re
 import shutil
 import threading
-import time
+import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -213,12 +217,20 @@ def _parse_time(value: Any) -> datetime | None:
     return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
 
 
-def _validate(event: dict[str, Any]) -> None:
-    for attr in REQUIRED_ATTRS:
-        if attr not in event or event[attr] is None:
-            raise InvalidEvent(f"missing required CloudEvents attribute {attr!r}")
-    if str(event["specversion"]) != "1.0":
-        raise InvalidEvent(f"unsupported specversion {event['specversion']!r}")
+def _validated(events: Iterable[dict[str, Any]]) -> list[dict[str, Any]]:
+    """The events as a list, each checked as a CloudEvents v1.0 object."""
+    batch = list(events)
+    for event in batch:
+        for attr in REQUIRED_ATTRS:
+            if attr not in event or event[attr] is None:
+                raise InvalidEvent(f"missing required CloudEvents attribute {attr!r}")
+        if str(event["specversion"]) != "1.0":
+            raise InvalidEvent(f"unsupported specversion {event['specversion']!r}")
+    return batch
+
+
+def _source_id(event: dict[str, Any]) -> tuple[str, str]:
+    return str(event["source"]), str(event["id"])
 
 
 def _encode_stream_dir(stream_id: str) -> str:
@@ -350,13 +362,15 @@ class EventStore:
         one listdir per append, so the OCC gate always judges the
         authoritative on-disk state."""
         key = (user_id, stream_id)
-        cached = self._ranges.get(key)
-        if cached is None:
-            return  # next access hydrates from the directory anyway
-        if {p for p, _, _ in cached} != set(self._parquet_files(user_id, stream_id)):
-            self._ranges.pop(key, None)
-            self._hwm.pop(key, None)
-            self._ids.pop(key, None)
+        cached = self._ranges.get(key)  # None: next access hydrates anyway
+        if cached is not None and {p for p, _, _ in cached} != set(self._parquet_files(*key)):
+            self._forget(key)
+
+    def _forget(self, key: tuple[str, str]) -> None:
+        """Drop a stream's caches so the next access re-reads the
+        directory. Callers hold the stream's in-process lock."""
+        for cache in (self._ranges, self._hwm, self._ids):
+            cache.pop(key, None)
 
     def _stream_exists(self, user_id: str, stream_id: str) -> bool:
         d = self._stream_dir(user_id, stream_id)
@@ -421,10 +435,7 @@ class EventStore:
         the self-heal path when files changed outside this instance
         (external compaction, a second writer)."""
         with self._lock(user_id, stream_id):
-            key = (user_id, stream_id)
-            self._ranges.pop(key, None)
-            self._hwm.pop(key, None)
-            self._ids.pop(key, None)
+            self._forget((user_id, stream_id))
 
     def revision(self, user_id: str, stream_id: str) -> int:
         """Event count of the stream (reference db.rs:103-113). Reads
@@ -452,47 +463,89 @@ class EventStore:
         (api.rs:449-454)."""
         if isinstance(events, dict):
             events = [events]
-        batch = list(events)
+        batch = _validated(events)
         if not batch:
             raise EmptyAppend("append batch must be non-empty")
-        for ev in batch:
-            _validate(ev)
 
-        with self._lock(user_id, stream_id), self._interprocess_lock(user_id, stream_id):
-            # judge the OCC gate against the authoritative on-disk
-            # state: another process may have appended/compacted since
-            # this instance last looked (multi-writer contract)
-            self._refresh_if_changed(user_id, stream_id)
-            current = self.revision(user_id, stream_id)
+        def gate(current: int) -> list[dict[str, Any]]:
             expected.check(current)
-            self._check_source_id_unique(user_id, stream_id, batch)
+            incoming = [_source_id(e) for e in batch]
+            if len(set(incoming)) != len(incoming):
+                raise SourceIdConflict("duplicate (source, id) within batch")
+            held = self._source_ids(user_id, stream_id)
+            for src, eid in incoming:
+                if (src, eid) in held:
+                    raise SourceIdConflict(f"event ({src!r}, {eid!r}) already in stream")
+            return batch
 
-            now = datetime.now(timezone.utc)
-            rows = self._to_arrow_rows(batch, start_revision=current, ingest_time=now)
-            table = pa.Table.from_pydict(rows, schema=_ARROW_SCHEMA)
+        return self._write(user_id, stream_id, gate)[1]
 
-            d = self._stream_dir(user_id, stream_id)
-            os.makedirs(d, exist_ok=True)
+    def append_new(
+        self, user_id: str, stream_id: str, events: Iterable[dict[str, Any]]
+    ) -> tuple[int, int]:
+        """Idempotent append: write, in order, only the events whose
+        ``(source, id)`` the stream does not hold yet (repeats within
+        ``events`` included); returns ``(appended, new_revision)``.
+        A full replay writes no file and returns ``(0, revision)``.
+        Every event is validated first, so an invalid event fails the
+        whole call. This is the exactly-once sink of the streaming
+        path: a re-delivered micro-batch drops what already landed."""
+        batch = _validated(events)
+
+        def gate(current: int) -> list[dict[str, Any]]:
+            held = self._source_ids(user_id, stream_id)
+            picked: set[tuple[str, str]] = set()
+            fresh = []
+            for ev in batch:
+                key = _source_id(ev)
+                if key not in held and key not in picked:
+                    picked.add(key)
+                    fresh.append(ev)
+            return fresh
+
+        return self._write(user_id, stream_id, gate)
+
+    def _write(self, user_id: str, stream_id: str, gate) -> tuple[int, int]:
+        """The one write body. Under both stream locks, against the
+        on-disk state (another process may have appended or compacted
+        since this instance last looked), ``gate(current_revision)``
+        raises or returns the events to write; they land as one file.
+        Returns ``(written, new_revision)``."""
+        key = (user_id, stream_id)
+        with self._lock(*key), self._interprocess_lock(*key):
+            self._refresh_if_changed(*key)
+            current = self.revision(*key)
+            batch = gate(current)
+            if not batch:
+                return 0, current
+            rows = self._to_arrow_rows(batch, current, datetime.now(timezone.utc))
             self._seq += 1
             # sortable filename: revision range + sequence → readers and
             # compaction see files in append order
-            fname = f"part-{current:012d}-{self._seq:06d}.parquet"
-            tmp = os.path.join(d, f".{fname}.tmp")
-            pq.write_table(table, tmp, compression="zstd")
-            final = os.path.join(d, fname)
-            os.rename(tmp, final)  # atomic publish
-            new_rev = current + len(batch)
-            self._hwm[(user_id, stream_id)] = new_rev
-            self._source_ids(user_id, stream_id).update(
-                (str(e["source"]), str(e["id"])) for e in batch
+            final = self._publish(
+                key,
+                f"part-{current:012d}-{self._seq:06d}.parquet",
+                pa.Table.from_pydict(rows, schema=_ARROW_SCHEMA),
             )
-            self._file_ranges(user_id, stream_id).append((final, current, len(batch)))
-            if (
-                self.auto_compact_files is not None
-                and len(self._ranges[(user_id, stream_id)]) >= self.auto_compact_files
-            ):
-                self.compact_stream(user_id, stream_id)  # RLock: reentrant
-            return new_rev
+            self._hwm[key] = current + len(batch)
+            self._source_ids(*key).update(_source_id(e) for e in batch)
+            self._file_ranges(*key).append((final, current, len(batch)))
+            if self.auto_compact_files is not None and len(self._ranges[key]) >= self.auto_compact_files:
+                self.compact_stream(*key)  # RLock: reentrant
+            return len(batch), current + len(batch)
+
+    def _publish(self, key: tuple[str, str], fname: str, table: pa.Table) -> str:
+        """Write ``table`` to a temporary file unique to this call, then
+        rename it to ``fname`` (atomic publish). Two attempts of one
+        write (a speculative or retried Spark task) never share a tmp
+        path, so neither can interleave into a corrupt file."""
+        d = self._stream_dir(*key)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{fname}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
+        pq.write_table(table, tmp, compression="zstd")
+        final = os.path.join(d, fname)
+        os.rename(tmp, final)
+        return final
 
     def _source_ids(self, user_id: str, stream_id: str) -> set[tuple[str, str]]:
         """The stream's (source, id) set — hydrated once from a
@@ -501,22 +554,11 @@ class EventStore:
         ids = self._ids.get(key)
         if ids is None:
             ids = set()
-            for path in self._parquet_files(user_id, stream_id):
+            for path, _, _ in self._file_ranges(user_id, stream_id):
                 t = pq.read_table(path, columns=["source", "id"])
                 ids.update(zip(t.column("source").to_pylist(), t.column("id").to_pylist()))
             self._ids[key] = ids
         return ids
-
-    def _check_source_id_unique(
-        self, user_id: str, stream_id: str, batch: list[dict[str, Any]]
-    ) -> None:
-        incoming = [(str(e["source"]), str(e["id"])) for e in batch]
-        if len(set(incoming)) != len(incoming):
-            raise SourceIdConflict("duplicate (source, id) within batch")
-        existing = self._source_ids(user_id, stream_id)
-        for src, eid in incoming:
-            if (src, eid) in existing:
-                raise SourceIdConflict(f"event ({src!r}, {eid!r}) already in stream")
 
     @staticmethod
     def _to_arrow_rows(
@@ -658,32 +700,11 @@ class EventStore:
         [-]last_modified; unknown → ValueError (HTTP 400)."""
         user_dir = os.path.join(self.root, f"user_id={_encode_stream_dir(user_id)}")
         result = []
-        if os.path.isdir(user_dir):
-            for entry in sorted(os.listdir(user_dir)):
-                if not entry.startswith("stream_id="):
-                    continue
-                sid = _decode_stream_dir(entry[len("stream_id=") :])
-                ranges = self._snapshot_ranges(user_id, sid)
-                if not ranges:
-                    continue
-                files = [p for p, _, _ in ranges]
-                revision = sum(n for _, _, n in ranges)
-                try:
-                    usage = sum(os.path.getsize(p) for p in files)
-                    last_modified = int(max(os.path.getmtime(p) for p in files))
-                except FileNotFoundError:
-                    # concurrent delete/compaction swapped the files
-                    # out from under the stat — skip this stream
-                    self._invalidate(user_id, sid)
-                    continue
-                result.append(
-                    {
-                        "id": sid,
-                        "revision": revision,
-                        "last_modified": last_modified,
-                        "usage": usage,
-                    }
-                )
+        for entry in sorted(os.listdir(user_dir)) if os.path.isdir(user_dir) else []:
+            if entry.startswith("stream_id="):
+                meta = self._metadata(user_id, _decode_stream_dir(entry[len("stream_id=") :]))
+                if meta is not None:
+                    result.append(meta)
         if sort:
             desc = sort.startswith("-")
             key = sort[1:] if desc else sort
@@ -695,20 +716,30 @@ class EventStore:
     def get_stream(self, user_id: str, stream_id: str) -> dict[str, Any]:
         """Single-stream metadata (reference server.rs:232-248)."""
         self._require_stream(user_id, stream_id)
+        meta = self._metadata(user_id, stream_id)
+        if meta is None:
+            raise StreamNotFound(f"{user_id}/{stream_id}")
+        return meta
+
+    def _metadata(self, user_id: str, stream_id: str) -> dict[str, Any] | None:
+        """``(id, revision, last_modified, usage)`` from the file index
+        and file stats, or None when the stream has no files — or a
+        concurrent delete/compaction swapped them out from under the
+        stat, in which case the stale caches are dropped too."""
         ranges = self._snapshot_ranges(user_id, stream_id)
-        files = [p for p, _, _ in ranges]
         try:
-            if not files:
-                raise FileNotFoundError(stream_id)
-            return {
-                "id": stream_id,
-                "revision": sum(n for _, _, n in ranges),
-                "last_modified": int(max(os.path.getmtime(p) for p in files)),
-                "usage": sum(os.path.getsize(p) for p in files),
-            }
+            stats = [os.stat(p) for p, _, _ in ranges]
         except FileNotFoundError:
+            stats = []
+        if not stats:
             self._invalidate(user_id, stream_id)
-            raise StreamNotFound(f"{user_id}/{stream_id}") from None
+            return None
+        return {
+            "id": stream_id,
+            "revision": sum(n for _, _, n in ranges),
+            "last_modified": int(max(s.st_mtime for s in stats)),
+            "usage": sum(s.st_size for s in stats),
+        }
 
     def delete_stream(self, user_id: str, stream_id: str) -> bool:
         """Drop the stream's partition (reference server.rs:250-261).
@@ -719,9 +750,7 @@ class EventStore:
                 return False
             with self._interprocess_lock(user_id, stream_id):
                 shutil.rmtree(d)
-            self._hwm.pop((user_id, stream_id), None)
-            self._ids.pop((user_id, stream_id), None)
-            self._ranges.pop((user_id, stream_id), None)
+            self._forget((user_id, stream_id))
             return True
 
     # -- whole-table access -------------------------------------------
@@ -738,15 +767,17 @@ class EventStore:
         """Fold a stream's micro-batch files into one sorted parquet
         file. At scale this is the periodic compaction job that keeps
         file counts bounded; revision order is preserved so row-group
-        stats stay tight. Returns the file count before compaction."""
-        with self._lock(user_id, stream_id), self._interprocess_lock(user_id, stream_id):
-            self._refresh_if_changed(user_id, stream_id)
-            files = self._parquet_files(user_id, stream_id)
+        stats stay tight. Returns the file count before compaction
+        (after dropping an interrupted compaction's covered leftovers)."""
+        key = (user_id, stream_id)
+        with self._lock(*key), self._interprocess_lock(*key):
+            self._refresh_if_changed(*key)
+            # the reconciled index, never the raw listing: a covered
+            # leftover of an interrupted compaction would fold back in
+            files = [p for p, _, _ in self._file_ranges(*key)]
             if len(files) <= 1:
                 return len(files)
-            ds = pa_ds.dataset(files, format="parquet")
-            t = ds.to_table().sort_by("revision")
-            d = self._stream_dir(user_id, stream_id)
+            t = pa_ds.dataset(files, format="parquet").to_table().sort_by("revision")
             # the compacted name must not collide with ANY source file
             # (a fresh instance's _seq can repeat an on-disk seq; the
             # rename would overwrite a source and the removal loop
@@ -754,17 +785,12 @@ class EventStore:
             # from the directory, past the largest existing one
             max_seq = max(int(os.path.basename(f).rsplit("-", 1)[1].split(".")[0]) for f in files)
             self._seq = max(self._seq, max_seq) + 1
-            fname = f"part-{0:012d}-{self._seq:06d}.parquet"
-            tmp = os.path.join(d, f".{fname}.tmp")
-            pq.write_table(t, tmp, compression="zstd")
             # crash-atomic ordering: publish the compacted file FIRST,
             # then remove the sources. A crash in between leaves
             # duplicates, which _file_ranges reconciles (covered-file
             # cleanup); remove-first would lose the stream entirely.
-            final = os.path.join(d, fname)
-            os.rename(tmp, final)
+            final = self._publish(key, f"part-{0:012d}-{self._seq:06d}.parquet", t)
             for f in files:
-                if f != final:  # never remove the file just published
-                    os.remove(f)
-            self._ranges[(user_id, stream_id)] = [(final, 0, t.num_rows)]
+                os.remove(f)
+            self._ranges[key] = [(final, 0, t.num_rows)]
             return len(files)

@@ -1,37 +1,37 @@
 """Structured-Streaming append path: readStream → foreachBatch →
-EventStore.append — the BASELINE.json `spark_approach` ("Structured
-Streaming for event append + DataFrame queries").
+``EventStore.append_new`` — the BASELINE.json `spark_approach`
+("Structured Streaming for event append + DataFrame queries").
 
-Each micro-batch is grouped per (user_id, stream_id) and appended
-through the store's OCC-gated, per-stream-serialized write path, so
-streaming ingestion gets exactly the same ordering/uniqueness
-guarantees as the request-path API (reference E1 lifecycle,
-SURVEY.md §3). Ordering within a micro-batch follows the source's
-`ingest_order` column when present — the arrival-order authority the
-reference gets from request serialization (README.md:8 "strictly
-ordered by arrival").
+Each micro-batch is grouped per (user_id, stream_id) with
+``applyInPandas``; Spark hands each group to exactly one task, and
+the task appends it through ``EventStore.append_new``, the store's
+OCC-gated, per-stream-serialized write path. Streaming ingestion
+therefore gets the same ordering and uniqueness guarantees as the
+request-path API (reference E1 lifecycle, SURVEY.md §3), honours the
+store's lock provider, and runs the store's auto-compaction. Order
+within a group follows the source's `ingest_order` column when
+present — the arrival-order authority the reference gets from
+request serialization (README.md:8 "strictly ordered by arrival").
 
 Scale: foreachBatch runs on the driver but only COORDINATES — the
-micro-batch itself never reaches the driver. Events are grouped per
-stream with ``applyInPandas`` and each group's parquet file is
-written EXECUTOR-SIDE under the store's ``part-{start}-{seq}``
-protocol; only a one-row-per-stream summary comes back. Streams are
-independent and Spark hands each group to exactly one task, so
-ingestion parallelizes across streams while staying serial within
-one (the reference's DashMap + per-stream-mutex concurrency model,
-server.rs:58, with the shuffle standing in for the map and task
-exclusivity for the mutex). Driver memory is O(streams-per-batch),
-not O(events-per-batch) — no ``toPandas`` funnel, no driver OOM on
-a large micro-batch."""
+micro-batch itself never reaches the driver; only a one-row-per-
+stream summary comes back. Streams are independent, so ingestion
+parallelizes across streams while staying serial within one (the
+reference's DashMap + per-stream-mutex concurrency model,
+server.rs:58). Driver memory is O(streams-per-batch), not
+O(events-per-batch)."""
 
 from __future__ import annotations
 
+import json
+import os
 from typing import Any
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+import hematite_spark
 from hematite_spark.store import EventStore
 
 
@@ -53,8 +53,6 @@ def _batch_to_events(pdf) -> list[dict[str, Any]]:
             # wire column carries the JSON-serialized data value
             # (CloudEvents structured content mode); decode so the
             # store doesn't double-encode it
-            import json
-
             try:
                 ev["data"] = json.loads(data)
             except (ValueError, TypeError):
@@ -63,170 +61,43 @@ def _batch_to_events(pdf) -> list[dict[str, Any]]:
     return events
 
 
-def _make_group_appender(root: str, repo_dir: str, auto_compact_files: int | None = None):
-    """Build the executor-side per-stream append function for
-    ``applyInPandas``. Each invocation owns exactly ONE stream's slice
-    of the micro-batch (Spark's grouped-map contract: one group → one
-    task), so within a micro-batch no two tasks ever write the same
-    stream — task exclusivity IS the per-stream mutex the reference
-    takes in-process (server.rs:58,184); the store's interprocess
-    flock additionally serializes against interactive writers sharing
-    the filesystem. The file it publishes follows the store's
-    ``part-{start:012d}-{seq:06d}.parquet`` protocol (tmp-write +
-    atomic rename), so batch readers, the interactive store API, and
-    compaction all consume it natively.
-
-    ``auto_compact_files``: when set, a worker whose stream reaches
-    that many files compacts it IN the worker, right after its append
-    — the worker already holds the stream's file listing and footers,
-    compaction parallelizes across streams with the batch itself, and
-    the driver's commit path stays O(streams) regardless of how many
-    streams need compaction (VERDICT r2 item 6: no driver-serialized
-    post-batch compaction loop)."""
+def _make_group_appender(store: EventStore, repo_dir: str):
+    """Build the executor-side function for ``applyInPandas``. Each
+    call gets ONE stream's slice of the micro-batch (one group, one
+    task), sorts it by ``ingest_order``, and appends it with
+    ``append_new`` on an EventStore built from ``store``'s root,
+    auto-compaction threshold and lock provider. So the task takes the
+    same stream lock as every other writer of the store, drops events
+    the stream already holds (a re-delivered batch appends nothing),
+    and compacts when the store would. Returns the one-row summary."""
+    root, auto_compact_files = store.root, store.auto_compact_files
+    # shipped as bytes: unpickling the provider imports its module,
+    # which needs the repo path the worker only gets inside the call
+    lock_provider = cloudpickle.dumps(store._lock_provider)
 
     def append_group(pdf):
-        import os
+        import pickle
         import sys
-        import uuid
 
         import pandas as pd
 
         if repo_dir not in sys.path:  # python workers may lack the repo path
             sys.path.insert(0, repo_dir)
-        import pyarrow as pa
-        import pyarrow.dataset as pa_ds
-        import pyarrow.parquet as pq
-        from datetime import datetime, timezone
-
-        from hematite_spark.store.store import (
-            _ARROW_SCHEMA,
-            EventStore,
-            _encode_stream_dir,
-        )
+        from hematite_spark.store import EventStore
         from hematite_spark.streaming.append import _batch_to_events
-
-        from hematite_spark.store.store import _validate
-
-        try:
-            import fcntl
-        except ImportError:  # pragma: no cover — non-POSIX worker
-            fcntl = None
 
         user_id = str(pdf["user_id"].iloc[0])
         stream_id = str(pdf["stream_id"].iloc[0])
         if "ingest_order" in pdf.columns:
             pdf = pdf.sort_values("ingest_order")
-
-        d = os.path.join(
-            root,
-            f"user_id={_encode_stream_dir(user_id)}",
-            f"stream_id={_encode_stream_dir(stream_id)}",
-        )
-        os.makedirs(d, exist_ok=True)
-        # the store's per-stream lock-service protocol (store.py
-        # _interprocess_lock): serialize this worker's append+compact
-        # against interactive EventStore writers on shared storage
-        lock_fd = None
-        if fcntl is not None:
-            lock_fd = os.open(os.path.join(d, ".lock"), os.O_CREAT | os.O_RDWR, 0o644)
-            fcntl.flock(lock_fd, fcntl.LOCK_EX)
-        try:
-            files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-            # current revision from filenames + footers: max(start + rows)
-            # is robust even against an interrupted compaction's leftover
-            # covered files (they never extend past the compacted file)
-            current = 0
-            max_seq = 0
-            existing: set[tuple[str, str]] = set()
-            entries: list[tuple[str, int, int]] = []  # (path, start, rows)
-            for fname in files:
-                path = os.path.join(d, fname)
-                start = int(fname.split("-")[1])
-                pf = pq.ParquetFile(path)
-                n_rows = pf.metadata.num_rows
-                entries.append((path, start, n_rows))
-                current = max(current, start + n_rows)
-                max_seq = max(max_seq, int(fname.rsplit("-", 1)[1].split(".")[0]))
-                t = pq.read_table(path, columns=["source", "id"])
-                existing.update(zip(t.column("source").to_pylist(), t.column("id").to_pylist()))
-
-            # idempotent replay (A10): a checkpoint-recovered micro-batch
-            # re-delivers rows whose (source,id) the stream already holds —
-            # drop them (and in-batch duplicates), append only the rest.
-            # Rehydrating the key set costs one narrow 2-column read per
-            # existing file each batch (stateless workers can't carry the
-            # incremental cache the interactive path keeps); worker-side
-            # auto-compaction bounds the file count, and at cluster scale
-            # a bloom-filter sidecar per stream replaces the re-read
-            events = []
-            seen = set(existing)
-            for ev in _batch_to_events(pdf):
-                _validate(ev)  # same CloudEvents gate as the API path
-                key = (str(ev["source"]), str(ev["id"]))
-                if key in seen:
-                    continue
-                seen.add(key)
-                events.append(ev)
-
-            appended = 0
-            if events:
-                rows = EventStore._to_arrow_rows(
-                    events, start_revision=current, ingest_time=datetime.now(timezone.utc)
-                )
-                table = pa.Table.from_pydict(rows, schema=_ARROW_SCHEMA)
-                fname = f"part-{current:012d}-{max_seq + 1:06d}.parquet"
-                # attempt-unique tmp name: under speculative execution /
-                # zombie retries two attempts of the same group may run
-                # concurrently; a shared tmp path would interleave writes
-                # into a corrupt file. Distinct tmps + atomic rename make
-                # the last publisher win with a whole file either way.
-                tmp = os.path.join(d, f".{fname}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
-                pq.write_table(table, tmp, compression="zstd")
-                final = os.path.join(d, fname)
-                os.rename(tmp, final)  # atomic publish
-                appended = len(events)
-                entries.append((final, current, appended))
-                max_seq += 1
-                current += appended
-
-            # worker-side auto-compaction: same crash-atomic ordering as
-            # EventStore.compact_stream (publish compacted file first,
-            # then remove sources; a leftover covered file is reconciled
-            # by readers). Runs inside this stream's task, so compactions
-            # across streams parallelize with the batch.
-            if auto_compact_files is not None and len(entries) >= auto_compact_files:
-                stale = {
-                    e[0]
-                    for e in entries
-                    if any(
-                        o[0] != e[0]
-                        and o[1] <= e[1]
-                        and o[1] + o[2] >= e[1] + e[2]
-                        and o[2] > e[2]
-                        for o in entries
-                    )
-                }
-                live = [p for p, _, _ in entries if p not in stale]
-                t = pa_ds.dataset(live, format="parquet").to_table().sort_by("revision")
-                cname = f"part-{0:012d}-{max_seq + 1:06d}.parquet"
-                tmp = os.path.join(d, f".{cname}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
-                pq.write_table(t, tmp, compression="zstd")
-                final = os.path.join(d, cname)
-                os.rename(tmp, final)
-                for p, _, _ in entries:
-                    if p != final:
-                        os.remove(p)
-        finally:
-            if lock_fd is not None:
-                fcntl.flock(lock_fd, fcntl.LOCK_UN)
-                os.close(lock_fd)
-
+        writer = EventStore(None, root, auto_compact_files, pickle.loads(lock_provider))
+        appended, new_revision = writer.append_new(user_id, stream_id, _batch_to_events(pdf))
         return pd.DataFrame(
             {
                 "user_id": [user_id],
                 "stream_id": [stream_id],
                 "appended": [appended],
-                "new_revision": [current],
+                "new_revision": [new_revision],
             }
         )
 
@@ -247,34 +118,25 @@ def stream_append_to_store(
     source, type[, subject, datacontenttype, dataschema, time, data,
     ingest_order]).
 
-    Checkpointing gives at-least-once delivery into the store; the
-    store's (source,id) uniqueness gate (A10) upgrades that to
-    exactly-once per stream — replayed rows collide on (source,id)
-    and are dropped idempotently executor-side.
+    Checkpointing gives at-least-once delivery into the store;
+    ``append_new`` upgrades that to exactly-once per stream —
+    replayed rows collide on (source,id) and are dropped idempotently
+    executor-side.
 
     The store root must be shared storage visible to executors (on
     local mode, the local filesystem; on a cluster, S3/HDFS/NFS —
-    the same assumption every Spark file sink makes). Cross-writer
-    OCC serialization remains per-stream: within one streaming query
-    the grouped-map contract serializes each stream into one task;
-    across concurrent writers the store's lock-service abstraction
-    applies, exactly as documented in store.py."""
-    import os as _os
-
-    import hematite_spark as _pkg
-
-    repo_dir = _os.path.dirname(_os.path.dirname(_os.path.abspath(_pkg.__file__)))
-    appender = _make_group_appender(store.root, repo_dir, store.auto_compact_files)
+    the same assumption every Spark file sink makes). Within one
+    streaming query the grouped-map contract puts each stream into
+    one task; across concurrent writers the store's lock provider
+    serializes, exactly as documented in store.py."""
+    repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(hematite_spark.__file__)))
+    appender = _make_group_appender(store, repo_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # executor-side distributed append: shuffle by stream, write
-        # per-stream parquet files in the workers — auto-compaction
-        # included (the worker holds the stream's files; compactions
-        # parallelize across streams instead of serializing on the
-        # driver). Only the one-row-per-stream summary is collected;
-        # the driver-local store instance then drops its caches for
-        # the touched streams so its next read sees the
-        # executor-written files.
+        # only the one-row-per-stream summary reaches the driver; the
+        # driver's store instance then drops its caches for the
+        # touched streams so its next read sees the executor-written
+        # files
         summaries = (
             batch_df.groupBy("user_id", "stream_id")
             .applyInPandas(appender, schema=_SUMMARY_SCHEMA)

@@ -154,6 +154,33 @@ def test_keepalive_survives_error_paths(api):
         conn.close()
 
 
+def test_keepalive_response_not_held_by_nagle(api):
+    """A keep-alive response goes out without waiting for the client's
+    delayed ACK: the header and body writes are not held back by
+    Nagle's algorithm (which costs ~40 ms per response)."""
+    import http.client
+    import socket
+    import statistics
+    import time
+
+    host, port = api.server_address
+    conn = http.client.HTTPConnection(host, port)
+    try:
+        conn.connect()
+        conn.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        walls = []
+        for _ in range(20):
+            t0 = time.perf_counter()
+            conn.request("GET", "/health")
+            r = conn.getresponse()
+            r.read()
+            walls.append(time.perf_counter() - t0)
+            assert r.status == 200
+    finally:
+        conn.close()
+    assert statistics.median(walls) < 0.020, walls
+
+
 def test_openapi_spec_served(api):
     """GET /openapi.yaml serves the spec unauthenticated (reference
     api.rs:138-141)."""

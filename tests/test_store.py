@@ -9,6 +9,7 @@ from hematite_spark.store import (
     EmptyAppend,
     EventStore,
     ExpectedRevision,
+    InvalidEvent,
     RevisionMismatch,
     SourceIdConflict,
     StreamNotFound,
@@ -130,6 +131,31 @@ def test_source_id_uniqueness_enforced(store):
         store.append(U, S, {"specversion": "1.0", "id": "x", "source": "svc", "type": "t"})
     # same id from a different source is fine (uniqueness is (source,id))
     store.append(U, S, {"specversion": "1.0", "id": "x", "source": "other", "type": "t"})
+
+
+def test_append_new_appends_only_unheld_events(tmp_path):
+    """The idempotent append keeps order, drops events the stream holds
+    and repeats within the call, and writes nothing for a full replay."""
+    import os
+
+    store = EventStore(None, str(tmp_path / "store"))
+    assert store.append(U, S, [minimal_event("a"), minimal_event("b")]) == 2
+    batch = [minimal_event(i) for i in ("b", "c", "a", "d", "c", "e")]
+    assert store.append_new(U, S, batch) == (3, 5)
+    assert [e["id"] for e in store.query(U, S)] == ["a", "b", "c", "d", "e"]
+    assert store.append_new(U, S, [minimal_event("x", source="other")]) == (1, 6)
+
+    d = store._stream_dir(U, S)
+    files = sorted(os.listdir(d))
+    assert store.append_new(U, S, batch) == (0, 6)
+    assert sorted(os.listdir(d)) == files  # a full replay writes no file
+    # a fresh instance judges the same on-disk state
+    assert EventStore(None, store.root).append_new(U, S, batch) == (0, 6)
+
+    bad = dict(minimal_event("f"), specversion="0.3")
+    with pytest.raises(InvalidEvent):
+        store.append_new(U, S, [minimal_event("g"), bad])
+    assert store.revision(U, S) == 6  # validation precedes any write
 
 
 def test_stream_metadata_and_sort(store):
@@ -272,29 +298,35 @@ def test_replay_to_revision(store, spark):
 def test_interrupted_compaction_recovers(store):
     """Crash between the compacted file's rename and the source
     removals leaves duplicates; hydration must reconcile (keep the
-    covering file, drop the covered ones) with no data loss or dup."""
+    covering file, drop the covered ones) with no data loss or dup —
+    whether a fresh instance's first call is a query or a compaction
+    (which must fold in the reconciled files, not the raw listing)."""
     import os
 
-    from hematite_spark.store import EventStore
-
-    for i in range(9):
-        store.append("u", "s", minimal_event(f"e-{i}"))
-    d = store._stream_dir("u", "s")
-    files_before = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-    # simulate: compaction wrote+renamed its file but crashed before
-    # removing sources — write the compacted file alongside the originals
     import pyarrow.dataset as pa_ds
     import pyarrow.parquet as pq
 
-    t = pa_ds.dataset([os.path.join(d, f) for f in files_before], format="parquet").to_table().sort_by("revision")
-    pq.write_table(t, os.path.join(d, "part-000000000000-999999.parquet"), compression="zstd")
-    cold = EventStore(None, store.root)  # fresh hydration sees duplicates
-    evs = cold.query("u", "s", 0, 100)
-    assert [e["id"] for e in evs] == [f"e-{i}" for i in range(9)]
-    assert cold.revision("u", "s") == 9
-    # stale covered files were cleaned up
-    left = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-    assert left == ["part-000000000000-999999.parquet"]
+    from hematite_spark.store import EventStore
+
+    for first in ("query", "compact"):
+        for i in range(9):
+            store.append("u", first, minimal_event(f"e-{i}"))
+        d = store._stream_dir("u", first)
+        files_before = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        # simulate: compaction wrote+renamed its file but crashed before
+        # removing sources — write the compacted file alongside the originals
+        t = pa_ds.dataset([os.path.join(d, f) for f in files_before], format="parquet").to_table().sort_by("revision")
+        pq.write_table(t, os.path.join(d, "part-000000000000-999999.parquet"), compression="zstd")
+        cold = EventStore(None, store.root)  # fresh hydration sees duplicates
+        if first == "compact":
+            cold.compact_stream("u", first)
+        evs = cold.query("u", first, 0, 100)
+        assert [e["id"] for e in evs] == [f"e-{i}" for i in range(9)], first
+        assert [e["_revision"] for e in evs] == list(range(9)), first
+        assert cold.revision("u", first) == 9
+        # stale covered files were cleaned up
+        left = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        assert left == ["part-000000000000-999999.parquet"], first
 
 
 def test_auto_compaction_bounds_file_count(spark, tmp_path):

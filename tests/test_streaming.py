@@ -81,11 +81,19 @@ def test_stream_append_idempotent_replay(spark, store, tmp_path):
     s1 = spark.readStream.schema(WIRE_SCHEMA).json(src)
     stream_append_to_store(s1, store, str(tmp_path / "ckpt1")).awaitTermination(60)
     # second run, new checkpoint → re-reads everything; plus one new batch
+    # that repeats one of its own ids later in the same micro-batch
     _write_wire_batch(src, 5, start=10)
+    with open(os.path.join(src, "batch-10.json"), "a") as f:
+        f.write(json.dumps({
+            "user_id": "u1", "stream_id": "s1", "specversion": "1.0", "id": "ev-12",
+            "source": "stream-src", "type": "test.event", "data": json.dumps({"i": -1}),
+            "ingest_order": 99,
+        }) + "\n")
     s2 = spark.readStream.schema(WIRE_SCHEMA).json(src)
     stream_append_to_store(s2, store, str(tmp_path / "ckpt2")).awaitTermination(60)
     assert store.revision("u1", "s1") == 15
     assert [e["id"] for e in store.query("u1", "s1", 0, 20)] == [f"ev-{i}" for i in range(15)]
+    assert store.get_event("u1", "s1", 12)["data"] == {"i": 12}  # first arrival kept
 
 
 def test_stream_append_multi_stream_executor_side(spark, store, tmp_path, monkeypatch):
@@ -317,6 +325,41 @@ def test_stream_append_honors_auto_compaction(spark, tmp_path):
     assert [e["id"] for e in store.query("u1", "ac", 0, 20)] == [f"ev-{i}" for i in range(15)]
     n_files = len(store._snapshot_ranges("u1", "ac"))
     assert n_files <= 2, f"auto-compaction did not bound files: {n_files}"
+
+
+def test_stream_append_honors_lease_lock_provider(spark, tmp_path):
+    """Streaming writers take the store's configured lock: with the
+    lease provider, no parquet file is published while another writer
+    holds the stream's lease."""
+    import threading
+
+    from hematite_spark.store.locks import LeaseLockProvider
+
+    store = EventStore(spark, str(tmp_path / "store_lease"), lock_provider="lease")
+    d = store._stream_dir("u1", "leased")
+    held, released = threading.Event(), []
+
+    def hold():
+        with LeaseLockProvider().exclusive(d):
+            held.set()
+            time.sleep(10)
+            released.append(time.time())
+
+    holder = threading.Thread(target=hold)
+    holder.start()
+    assert held.wait(30)
+    src = str(tmp_path / "incoming_lease")
+    _write_wire_batch(src, 5, stream="leased")
+    sdf = spark.readStream.schema(WIRE_SCHEMA).json(src)
+    stream_append_to_store(sdf, store, str(tmp_path / "ckpt_lease")).awaitTermination(120)
+    holder.join(60)
+    assert not holder.is_alive() and released
+    assert store.revision("u1", "leased") == 5
+    mtimes = [os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".parquet")]
+    assert mtimes
+    # file timestamps come from the kernel's coarse clock, which may
+    # trail time.time() by one tick
+    assert all(m >= released[0] - 0.05 for m in mtimes), (mtimes, released)
 
 
 def test_stream_append_rejects_invalid_specversion(spark, store, tmp_path):
