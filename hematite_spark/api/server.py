@@ -21,15 +21,12 @@ Routes also include GET /openapi.yaml serving this API's spec
 (reference api.rs:138-141).
 
 Auth: Bearer JWT, user = `sub` claim (reference openid.rs:10-12,
-api.rs:187). Signature verification is real by default: construct an
-``es384.ES384Verifier`` from a JWKS document (+ issuer/audience) and
-pass it as ``verifier=`` — full ES384 ECDSA over P-384 implemented
-in pure Python (es384.py; reference openid.rs:39-153). A custom
-callable(token) -> user_id works too. The INSECURE dev-mode decoder
-(`dev_verifier`, no signature check) now requires the explicit
-``allow_insecure_dev_auth=True`` flag — a deployment can no longer
-run unauthenticated by accident. 401 semantics match the reference:
-missing/malformed bearer → 401.
+api.rs:187). ``verifier=`` is required: construct an
+``es384.ES384Verifier`` from a JWKS document (+ issuer/audience), which
+checks the ES384 signature through the ``cryptography`` library
+(es384.py; reference openid.rs:39-153), or pass any callable(token) ->
+user_id that raises ``AuthError`` on a bad token. 401 semantics match
+the reference: missing/malformed bearer → 401.
 
 Deliberate deviations from reference quirks (SURVEY.md §2 error
 table): point read past end of an existing stream → 404 (reference:
@@ -38,7 +35,6 @@ table): point read past end of an existing stream → 404 (reference:
 
 from __future__ import annotations
 
-import base64
 import json
 import os
 import re
@@ -66,24 +62,6 @@ DEFAULT_LIMIT = 50  # api.rs:272
 
 class AuthError(Exception):
     pass
-
-
-def dev_verifier(token: str) -> str:
-    """DEV-MODE token verifier: decodes the JWT payload and returns
-    `sub` WITHOUT verifying the signature (no crypto libs in this
-    environment). Tokens that aren't JWS-shaped are rejected."""
-    parts = token.split(".")
-    if len(parts) != 3:
-        raise AuthError("not a JWS compact token")
-    try:
-        payload = parts[1] + "=" * (-len(parts[1]) % 4)
-        claims = json.loads(base64.urlsafe_b64decode(payload))
-    except Exception as exc:  # noqa: BLE001 — any decode failure is a 401
-        raise AuthError(f"undecodable claims: {exc}") from exc
-    sub = claims.get("sub")
-    if not sub:
-        raise AuthError("missing sub claim")
-    return str(sub)
 
 
 def _jsonapi_error(status: int, title: str, detail: str) -> dict[str, Any]:
@@ -301,21 +279,15 @@ class HematiteServer(ThreadingHTTPServer):
         host: str = "127.0.0.1",
         port: int = 0,
         verifier: Callable[[str], str] | None = None,
-        allow_insecure_dev_auth: bool = False,
     ):
-        """``verifier`` is REQUIRED (e.g. ``es384.ES384Verifier``);
-        running without signature verification takes the explicit
-        ``allow_insecure_dev_auth=True`` opt-in so a deployment can
-        never fall back to forgeable tokens by accident (any client
-        could otherwise mint a ``sub`` and read/write any tenant)."""
+        """``verifier`` (e.g. ``es384.ES384Verifier``) is required: there
+        is no unauthenticated mode, since any client could otherwise
+        mint a ``sub`` and read/write any tenant."""
         if verifier is None:
-            if not allow_insecure_dev_auth:
-                raise ValueError(
-                    "no verifier configured: pass verifier= (e.g. "
-                    "es384.ES384Verifier(jwks, issuer=..., audience=...)) "
-                    "or explicitly opt in with allow_insecure_dev_auth=True"
-                )
-            verifier = dev_verifier
+            raise ValueError(
+                "no verifier configured: pass verifier= (e.g. "
+                "es384.ES384Verifier(jwks, issuer=..., audience=...))"
+            )
         super().__init__((host, port), _Handler)
         self.store = store
         self.verifier = verifier
@@ -335,11 +307,7 @@ def serve(
     host: str = "127.0.0.1",
     port: int = 8080,
     verifier: Callable[[str], str] | None = None,
-    allow_insecure_dev_auth: bool = False,
 ) -> None:
     """Blocking entry point (the reference's main.rs boot sequence).
-    Refuses to start without a verifier unless the caller explicitly
-    passes ``allow_insecure_dev_auth=True``."""
-    HematiteServer(
-        store, host, port, verifier=verifier, allow_insecure_dev_auth=allow_insecure_dev_auth
-    ).serve_forever()
+    Refuses to start without a verifier."""
+    HematiteServer(store, host, port, verifier=verifier).serve_forever()

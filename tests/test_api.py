@@ -12,19 +12,37 @@ import urllib.request
 import pytest
 
 from hematite_spark.api import HematiteServer
+from hematite_spark.api.es384 import (
+    ES384Verifier,
+    generate_keypair,
+    jwk_from_public,
+    mint_token,
+)
+from hematite_spark.api.server import AuthError
 from hematite_spark.store import EventStore
+
+_PRIV, _PUB = generate_keypair()
+
+
+def _b64(raw: bytes) -> str:
+    return base64.urlsafe_b64encode(raw).rstrip(b"=").decode()
 
 
 def _token(sub: str) -> str:
-    """Unsigned JWS-shaped dev token (header.payload.sig)."""
-    enc = lambda d: base64.urlsafe_b64encode(json.dumps(d).encode()).rstrip(b"=").decode()
+    """ES384 token for ``sub`` signed by the ``api`` fixture's key."""
+    return mint_token(_PRIV, {"sub": sub})
+
+
+def _unsigned_token(sub: str) -> str:
+    """Forged JWS-shaped token (alg none, no signature) claiming ``sub``."""
+    enc = lambda d: _b64(json.dumps(d).encode())
     return f"{enc({'alg': 'none'})}.{enc({'sub': sub})}.x"
 
 
 @pytest.fixture()
 def api(tmp_path):
     store = EventStore(None, str(tmp_path / "store"))
-    server = HematiteServer(store, port=0, allow_insecure_dev_auth=True)
+    server = HematiteServer(store, port=0, verifier=ES384Verifier([jwk_from_public(_PUB)]))
     server.start_background()
     yield server
     server.shutdown()
@@ -236,8 +254,7 @@ def test_keepalive_survives_get_delete_with_body(api):
 
 
 def test_server_refuses_to_start_without_verifier(tmp_path):
-    """The production entry points cannot silently run unauthenticated
-    (dev decode requires the explicit opt-in flag)."""
+    """The server has no unauthenticated mode: no verifier, no start."""
     store = EventStore(None, str(tmp_path / "store"))
     with pytest.raises(ValueError, match="verifier"):
         HematiteServer(store, port=0)
@@ -248,13 +265,6 @@ def test_es384_signed_auth_end_to_end(tmp_path):
     accepted; a tampered signature, wrong issuer, wrong audience, and
     an expired token are all rejected with 401."""
     import time as _time
-
-    from hematite_spark.api.es384 import (
-        ES384Verifier,
-        generate_keypair,
-        jwk_from_public,
-        mint_token,
-    )
 
     priv, pub = generate_keypair()
     verifier = ES384Verifier(
@@ -292,8 +302,8 @@ def test_es384_signed_auth_end_to_end(tmp_path):
         # tampered signature → 401
         tampered = good[:-4] + ("AAAA" if good[-4:] != "AAAA" else "BBBB")
         assert call(tampered, method="GET", path="/streams/s1", body=None) == 401
-        # forged unsigned token (the dev-mode shape) → 401
-        assert call(_token("alice"), method="GET", path="/streams/s1", body=None) == 401
+        # forged unsigned token (alg none) → 401
+        assert call(_unsigned_token("alice"), method="GET", path="/streams/s1", body=None) == 401
         # wrong issuer / wrong audience / expired → 401
         assert call(mint_token(priv, {**claims, "iss": "https://evil"}), ) == 401
         assert call(mint_token(priv, {**claims, "aud": "other"})) == 401
@@ -313,14 +323,6 @@ def test_jwks_discovery_refresh_on_rotation(tmp_path):
     within the refresh cooldown an unknown kid is a 401 WITHOUT a
     refetch; TTL expiry refreshes on the normal path."""
     import time as _time
-
-    from hematite_spark.api.es384 import (
-        ES384Verifier,
-        generate_keypair,
-        jwk_from_public,
-        mint_token,
-    )
-    from hematite_spark.api.server import AuthError
 
     priv1, pub1 = generate_keypair()
     priv2, pub2 = generate_keypair()
@@ -392,3 +394,138 @@ def test_pagination_validation_and_clamps(api):
     assert headers["Cache-Control"] == "no-cache"  # empty page is NOT immutable
     status, _, page = _req(api, "GET", "/streams/s/events?page[offset]=-5&page[limit]=-1")
     assert status == 200 and page == []
+
+
+def test_malformed_tokens_get_401_on_a_live_connection(api):
+    """Tokens that decode but have the wrong shape — a non-object header
+    or claims set, a non-string kid, a signed exp or nbf that is not a
+    finite number — get a JSON:API 401, and the keep-alive connection
+    stays usable."""
+    import http.client
+
+    claims = _b64(json.dumps({"sub": "user-1"}).encode())
+    signature = _token("user-1").split(".")[2]
+    malformed = [
+        f"{_b64(b'[1]')}.{claims}.{signature}",
+        mint_token(_PRIV, [1]),
+        mint_token(_PRIV, {"sub": "user-1"}, kid=["key-1"]),
+        mint_token(_PRIV, {"sub": "user-1", "exp": "soon"}),
+        mint_token(_PRIV, {"sub": "user-1", "nbf": [0]}),
+        mint_token(_PRIV, {"sub": "user-1", "exp": 10**400}),
+    ]
+    host, port = api.server_address
+    conn = http.client.HTTPConnection(host, port)
+    try:
+        for token in malformed:
+            conn.request("GET", "/streams", headers={"Authorization": f"Bearer {token}"})
+            r = conn.getresponse()
+            body = json.loads(r.read())
+            assert r.status == 401, token
+            assert body["errors"][0]["status"] == "401"
+            conn.request("GET", "/health")
+            r = conn.getresponse()
+            assert r.status == 200 and json.loads(r.read()) == {"status": "pass"}
+    finally:
+        conn.close()
+
+
+def test_token_cache_under_threads_returns_each_tokens_own_sub():
+    """More distinct tokens than the verifier caches, verified from more
+    threads than cores in interleaved, repeating orders: every call
+    returns the ``sub`` of the token it was given, hit or miss."""
+    import random
+    import sys
+    import threading
+
+    verifier = ES384Verifier([jwk_from_public(_PUB)])
+    subs = [f"tenant-{i:04d}" for i in range(1100)]
+    tokens = [_token(sub) for sub in subs]
+    wrong = []
+
+    def worker(seed):
+        rng = random.Random(seed)
+        for i in [rng.randrange(len(tokens)) for _ in range(800)]:
+            got = verifier(tokens[i])
+            if got != subs[i]:
+                wrong.append((i, got))
+
+    threads = [threading.Thread(target=worker, args=(seed,)) for seed in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert wrong == []
+
+
+def test_cached_token_expires(monkeypatch):
+    """A cache hit skips the signature check but not the expiry check."""
+    from hematite_spark.api import es384
+
+    checks = []
+    inner = es384.verify_raw
+    monkeypatch.setattr(es384, "verify_raw", lambda *a: checks.append(1) or inner(*a))
+    now = [1000.0]
+    verifier = ES384Verifier([jwk_from_public(_PUB)], clock=lambda: now[0], leeway=30.0)
+    token = mint_token(_PRIV, {"sub": "alice", "exp": 1100})
+    assert verifier(token) == "alice"
+    now[0] = 1130.0  # exp + leeway: still valid
+    assert verifier(token) == "alice"
+    assert len(checks) == 1
+    now[0] = 1130.5
+    with pytest.raises(AuthError, match="token expired"):
+        verifier(token)
+
+
+# Known answer: a JWK and a token signed by an independent pure-Python
+# ECDSA P-384 implementation (random nonce; claims sub, iss, aud).
+_KAT_JWK = {
+    "kty": "EC",
+    "crv": "P-384",
+    "kid": "kat",
+    "x": "aaFLMEgO_91iuOLvvgS5DNPWVMKDxhd75VPDXkzdY7kK7RPovIy4MZdm2etEhuNz",
+    "y": "dPANASTMhPtmi7aaoPbQ5u1909uyU98QEeq4IKdkNk1MtZZDGu70o2gRrBmt-WFG",
+}
+_KAT_TOKEN = (
+    "eyJhbGciOiJFUzM4NCIsInR5cCI6IkpXVCIsImtpZCI6ImthdCJ9"
+    ".eyJzdWIiOiJrYXQtdXNlciIsImlzcyI6Imh0dHBzOi8vYXV0aC5leGFtcGxlIiwiYXVkIjoiaGVtYXRpdGUifQ"
+    ".y1dYsszztSZX_vDE04Hgu0NZjL5DJnJfZVKkEQDnylh-MR72-IiHIUOCNV4-GrMKY-xLWJoY6k2viXDWthxLxVKTM"
+    "WFLivMFXUclXV5f9iRVXkiNjUALumpMSjoWA8Pb"
+)
+# order of the P-384 base point (FIPS 186-4 D.1.2.4)
+_P384_N = int(
+    "ffffffffffffffffffffffffffffffffffffffffffffffff"
+    "c7634d81f4372ddf581a0db248b0a77aecec196accc52973",
+    16,
+)
+
+
+def test_es384_known_answer_and_edge_cases():
+    verifier = ES384Verifier([_KAT_JWK], issuer="https://auth.example", audience="hematite")
+    assert verifier(_KAT_TOKEN) == "kat-user"
+
+    header, payload, sig64 = _KAT_TOKEN.split(".")
+    raw = bytearray(base64.urlsafe_b64decode(payload + "=" * (-len(payload) % 4)))
+    raw[raw.index(b"kat-user")] ^= 1  # one payload byte: "kat-user" → "jat-user"
+    with pytest.raises(AuthError, match="signature verification failed"):
+        verifier(f"{header}.{_b64(bytes(raw))}.{sig64}")
+
+    sig = base64.urlsafe_b64decode(sig64 + "=" * (-len(sig64) % 4))
+    r, s = int.from_bytes(sig[:48], "big"), int.from_bytes(sig[48:], "big")
+    for r_, s_ in [(0, s), (r, 0), (_P384_N, s), (r, _P384_N)]:
+        forged = _b64(r_.to_bytes(48, "big") + s_.to_bytes(48, "big"))
+        with pytest.raises(AuthError, match="signature verification failed"):
+            verifier(f"{header}.{payload}.{forged}")
+    for bad in (sig[:95], sig + b"\0"):
+        with pytest.raises(AuthError, match="malformed ES384 signature"):
+            verifier(f"{header}.{payload}.{_b64(bad)}")
+
+    y = int.from_bytes(base64.urlsafe_b64decode(_KAT_JWK["y"] + "=="), "big")
+    off_curve = {**_KAT_JWK, "y": _b64((y + 1).to_bytes(48, "big"))}
+    with pytest.raises(ValueError):
+        ES384Verifier([off_curve])
