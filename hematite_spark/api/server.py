@@ -39,6 +39,7 @@ import json
 import os
 import re
 import threading
+import traceback
 from email.utils import formatdate
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
@@ -101,6 +102,7 @@ class _Handler(BaseHTTPRequestHandler):
         content_type: str = "application/json",
     ) -> None:
         data = raw if raw is not None else (json.dumps(body).encode() if body is not None else b"")
+        self._responded = True
         self.send_response(status)
         self.send_header("Content-Type", content_type)
         self.send_header("Content-Length", str(len(data)))
@@ -128,6 +130,21 @@ class _Handler(BaseHTTPRequestHandler):
             self._error(401, "Unauthorized", str(exc))
             return None
 
+    def _dispatch(self, route: Callable[[], None]) -> None:
+        """Run one request's route. An exception no route handles (an
+        ``OSError`` from the store, a bug in a custom verifier) becomes
+        a JSON:API 500 when no response has started, so the client gets
+        an answer and the keep-alive connection stays usable; the
+        traceback goes to stderr, as ``socketserver`` would print it."""
+        self._responded = False
+        try:
+            route()
+        except Exception:
+            if self._responded:
+                raise
+            traceback.print_exc()
+            self._error(500, "Internal Server Error", "unexpected server error")
+
     # -- routing -------------------------------------------------------
 
     _R_STREAMS = re.compile(r"^/streams/?$")
@@ -136,6 +153,9 @@ class _Handler(BaseHTTPRequestHandler):
     _R_EVENT = re.compile(r"^/streams/([^/]+)/events/(\d+)/?$")
 
     def do_GET(self) -> None:  # noqa: N802 (http.server API)
+        self._dispatch(self._get)
+
+    def _get(self) -> None:
         self._drain_body()
         url = urlparse(self.path)
         q = parse_qs(url.query)
@@ -209,6 +229,9 @@ class _Handler(BaseHTTPRequestHandler):
         self._error(404, "Not Found", self.path)  # main.rs fallback
 
     def do_POST(self) -> None:  # noqa: N802
+        self._dispatch(self._post)
+
+    def _post(self) -> None:
         url = urlparse(self.path)
         q = parse_qs(url.query)
         raw = self._drain_body()
@@ -251,6 +274,9 @@ class _Handler(BaseHTTPRequestHandler):
         self._send(201, {"revision": new_rev}, {"Content-Location": head})
 
     def do_DELETE(self) -> None:  # noqa: N802
+        self._dispatch(self._delete)
+
+    def _delete(self) -> None:
         self._drain_body()
         url = urlparse(self.path)
         user = self._user()

@@ -5,12 +5,15 @@ server.rs — see SURVEY.md §2 A) on a Spark-native layout:
 
 * one logical ``events`` table, hive-partitioned on disk as
   ``user_id=<u>/stream_id=<s>/`` with parquet files sorted by
-  ``revision`` — positional access is a partition-pruned scan with
-  row-group min/max skipping, replacing the reference's 8-byte
-  offset index (db.rs:140-161) with structures Spark already has;
+  ``revision``. In place of the reference's 8-byte offset index
+  (db.rs:140-161) each stream has a file-level index — per file its
+  name, start revision and row count — so a read opens only the
+  files overlapping its revision window, and row-group min/max stats
+  prune within a file. This is file-level, not an O(1) seek: a
+  compacted stream is one file, which a point read opens whole;
 * appends are micro-batches: each append writes ONE parquet file
   into the stream's partition and assigns gapless 0-based revisions
-  from a per-stream high-water mark (the reference's
+  from the end of the file index (the reference's
   ``revision = len(index)/8`` counter, db.rs:103-113);
 * optimistic concurrency: the ``ExpectedRevision`` gate
   (Any | NoStream | StreamExists | Exact) is checked under a
@@ -31,17 +34,24 @@ parquet files per micro-batch (Structured Streaming executors call
 per-stream, and compaction (``compact_stream``) folds small files
 into sorted large ones so scans stay efficient. This module is the
 only one that names store files, takes stream locks or compacts.
-Writer serialization is two-level: the in-process RLock per stream
-(the reference's tokio mutex, server.rs:58,184) plus the store's
-``LockProvider`` (``flock`` on ``<stream_dir>/.lock`` by default, or
-a TTL lease) held across the append critical section, so multiple
-EventStore instances on shared storage serialize appends and the OCC
-gate judges the authoritative on-disk state
-(``_refresh_if_changed``). Streaming writers build their EventStore
-with the same provider, so they serialize against interactive
-writers the same way. On a cluster the provider is replaced by a
-lock service or Delta-style transaction log; the API and the gate
-semantics are unchanged.
+
+Freshness has one rule: every public read and write reconciles the
+stream's file index against ONE listing of its directory
+(``_file_ranges``). Files are published by atomic rename under names
+that are never reused (``part-{start:012d}-{uuid hex}.parquet``), so
+the listing is the record of what exists, and an unchanged set of
+names means unchanged files; footers are read only for new names.
+Any number of EventStore instances on one root therefore see each
+other's appends, compactions and deletes on their next call, with no
+invalidation hook. Writer serialization is two-level: the in-process
+lock per stream (the reference's tokio mutex, server.rs:58,184) plus
+the store's ``LockProvider`` (``flock`` on ``<stream_dir>/.lock`` by
+default, or a TTL lease) held across the append critical section, so
+the OCC gate judges the on-disk state. Streaming writers build their
+EventStore with the same provider, so they serialize against
+interactive writers the same way. On a cluster the provider is
+replaced by a lock service or Delta-style transaction log; the API
+and the gate semantics are unchanged.
 
 Scale notes (100 TB design point): tenant/stream partitioning keeps
 point and range reads pruned to one directory regardless of table
@@ -61,7 +71,7 @@ import re
 import shutil
 import threading
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any, ClassVar, Iterable
@@ -233,6 +243,18 @@ def _source_id(event: dict[str, Any]) -> tuple[str, str]:
     return str(event["source"]), str(event["id"])
 
 
+def _end(ranges: list[tuple[str, int, int]]) -> int:
+    """The revision after a file index's last file (0 when empty)."""
+    return ranges[-1][1] + ranges[-1][2] if ranges else 0
+
+
+def _file_name(start: int) -> str:
+    """A new store file's name: the start revision it holds, then a
+    uuid, so that no name is ever reused (a deleted and recreated
+    stream, or a compaction, never republishes a known name)."""
+    return f"part-{start:012d}-{uuid.uuid4().hex}.parquet"
+
+
 def _encode_stream_dir(stream_id: str) -> str:
     """Filesystem-safe partition value. The reference base32-encodes
     stream names for the same reason (server.rs:134-148); we
@@ -280,28 +302,18 @@ class EventStore:
         self.auto_compact_files = auto_compact_files
         self._lock_provider = resolve_lock_provider(lock_provider)
         os.makedirs(root, exist_ok=True)
-        self._locks: dict[tuple[str, str], threading.RLock] = {}
+        self._locks: dict[tuple[str, str], threading.Lock] = {}
         self._locks_guard = threading.Lock()
-        # per-stream high-water mark (event count); lazily hydrated
-        self._hwm: dict[tuple[str, str], int] = {}
-        # per-stream (source, id) set for the uniqueness gate; lazily
-        # hydrated once, then maintained incrementally — without it
-        # every append re-reads all prior files (O(n²) appends). At
-        # cluster scale this becomes a bloom filter / key index beside
-        # the stream rather than process memory.
-        self._ids: dict[tuple[str, str], set[tuple[str, str]]] = {}
-        # per-stream [(path, start_revision, n_rows)] sorted by start —
-        # the file-level positional index: a point/range read opens
-        # only the files overlapping its revision window, independent
-        # of how many micro-batch files the stream has accumulated
-        # (the reference gets this from index.dat; parquet row-group
-        # stats then prune within the file)
+        # per-stream file index [(file name, start_revision, n_rows)]
+        # sorted by start, reconciled against the directory listing on
+        # every call (_file_ranges): a point/range read opens only the
+        # files overlapping its revision window
         self._ranges: dict[tuple[str, str], list[tuple[str, int, int]]] = {}
-        self._seq = 0  # monotonic file sequence within this process
-        # interprocess lock state: open fd + reentrancy depth per
-        # stream, guarded by the stream's in-process RLock (which is
-        # always held around _interprocess_lock)
-        self._flock_depth: dict[tuple[str, str], int] = {}
+        # per-stream (source, id) set for the uniqueness gate, extended
+        # with each new file's pairs — without it every append re-reads
+        # all prior files (O(n²) appends). At cluster scale this becomes
+        # a bloom filter / key index beside the stream.
+        self._ids: dict[tuple[str, str], set[tuple[str, str]]] = {}
 
     # -- catalog / paths
 
@@ -312,141 +324,95 @@ class EventStore:
             f"stream_id={_encode_stream_dir(stream_id)}",
         )
 
-    def _lock(self, user_id: str, stream_id: str) -> threading.RLock:
-        # RLock: read paths take it briefly for cache snapshots, and
-        # append (already holding it) calls those same helpers
+    def _lock(self, user_id: str, stream_id: str) -> threading.Lock:
         key = (user_id, stream_id)
         with self._locks_guard:
             if key not in self._locks:
-                self._locks[key] = threading.RLock()
+                self._locks[key] = threading.Lock()
             return self._locks[key]
 
     @contextmanager
-    def _interprocess_lock(self, user_id: str, stream_id: str):
-        """Cross-instance writer serialization via the pluggable
-        ``LockProvider`` (flock on POSIX by default; O_EXCL TTL lease
-        where flock is advisory-unreliable — see store/locks.py). This
-        is the per-stream lock service the multi-writer OCC contract
-        requires — two EventStore instances (processes) on shared
-        storage serialize their append/compact/delete critical
-        sections here, the same way the reference serializes per
-        stream with its tokio mutex (reference server.rs:58,184) but
-        across process boundaries.
-
-        MUST be called with the stream's in-process RLock held (it
-        guards the reentrancy depth map, and orders in-process
-        waiters before the cross-process wait). Reentrant within a
-        holder: append → auto-compact re-enters without re-locking.
-        At cluster scale the same role is played by a lock service
-        or a Delta-style transaction log; the providers here are the
-        shared-filesystem members of that family."""
-        key = (user_id, stream_id)
-        if self._flock_depth.get(key, 0) > 0:
-            self._flock_depth[key] += 1
-            try:
-                yield
-            finally:
-                self._flock_depth[key] -= 1
-            return
-        with self._lock_provider.exclusive(self._stream_dir(user_id, stream_id)):
-            self._flock_depth[key] = 1
-            try:
-                yield
-            finally:
-                self._flock_depth[key] = 0
-
-    def _refresh_if_changed(self, user_id: str, stream_id: str) -> None:
-        """Drop caches when the directory no longer matches them —
-        the write-path guard against a stale view of a stream another
-        process appended to or compacted. Called under both locks:
-        one listdir per append, so the OCC gate always judges the
-        authoritative on-disk state."""
-        key = (user_id, stream_id)
-        cached = self._ranges.get(key)  # None: next access hydrates anyway
-        if cached is not None and {p for p, _, _ in cached} != set(self._parquet_files(*key)):
-            self._forget(key)
-
-    def _forget(self, key: tuple[str, str]) -> None:
-        """Drop a stream's caches so the next access re-reads the
-        directory. Callers hold the stream's in-process lock."""
-        for cache in (self._ranges, self._hwm, self._ids):
-            cache.pop(key, None)
-
-    def _stream_exists(self, user_id: str, stream_id: str) -> bool:
-        d = self._stream_dir(user_id, stream_id)
-        return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
-
-    def _parquet_files(self, user_id: str, stream_id: str) -> list[str]:
-        d = self._stream_dir(user_id, stream_id)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-        )
+    def _exclusive(self, key: tuple[str, str]):
+        """Both stream locks: the in-process one (the reference's tokio
+        mutex, server.rs:58,184), then the ``LockProvider``'s
+        cross-instance one, so EventStore instances (processes) on
+        shared storage serialize their append/compact/delete critical
+        sections. At cluster scale a lock service or a Delta-style
+        transaction log plays this role."""
+        with self._lock(*key), self._lock_provider.exclusive(self._stream_dir(*key)):
+            yield
 
     def _file_ranges(self, user_id: str, stream_id: str) -> list[tuple[str, int, int]]:
-        """(path, start_revision, n_rows) per file, sorted by start.
-        Hydrated once from footers, then maintained on append/compact.
-
-        MUST be called with the stream lock held (append/compact
-        already hold it; readers take it briefly to snapshot) —
-        unsynchronized hydration raced with append could clobber or
-        double entries under the threaded API server."""
+        """The stream's file index, reconciled against one listing of
+        its directory: footers are read only for names not seen
+        before, a known name that vanished (a compaction or delete
+        elsewhere) drops the (source, id) set, and a file fully
+        covered by a larger one (the leftover of an interrupted
+        compaction) is removed. File names are never reused, so an
+        unchanged set of names means unchanged files. The start
+        revision comes from the name (``part-{start:012d}-...``), the
+        row count from the footer. Callers hold the stream's lock."""
         key = (user_id, stream_id)
-        ranges = self._ranges.get(key)
-        if ranges is None:
-            # start revision is authoritative from the filename
-            # (part-{start:012d}-{seq}); rows from the footer
-            entries = []
-            for path in self._parquet_files(*key):
-                start = int(os.path.basename(path).split("-")[1])
-                n = pq.ParquetFile(path).metadata.num_rows
-                entries.append((path, start, n))
-            # reconcile an interrupted compaction (crash between the
-            # compacted file's rename and the old files' removal):
-            # a file fully covered by a LARGER file is a stale
-            # pre-compaction leftover — finish the cleanup here
-            stale = {
-                e[0]
-                for e in entries
-                if any(
-                    o[0] != e[0] and o[1] <= e[1] and o[1] + o[2] >= e[1] + e[2] and o[2] > e[2]
-                    for o in entries
-                )
-            }
-            for path in stale:
-                try:
-                    os.remove(path)
-                except OSError:
-                    pass
-            ranges = sorted((e for e in entries if e[0] not in stale), key=lambda e: e[1])
-            self._ranges[key] = ranges
+        d = self._stream_dir(*key)
+        try:
+            listing = set(os.listdir(d))
+        except FileNotFoundError:
+            listing = set()
+        known = self._ranges.setdefault(key, [])
+        known_names = {e[0] for e in known}
+        added = [f for f in listing - known_names if f.endswith(".parquet")]
+        vanished = not known_names <= listing
+        if not added and not vanished:
+            return known
+        if vanished:
+            self._ids.pop(key, None)
+        new = [
+            (f, int(f.split("-")[1]), pq.ParquetFile(os.path.join(d, f)).metadata.num_rows)
+            for f in added
+        ]
+        entries = [e for e in known if e[0] in listing] + new
+
+        def covered(e, others):
+            return any(
+                o[0] != e[0] and o[1] <= e[1] and o[1] + o[2] >= e[1] + e[2] and o[2] > e[2]
+                for o in others
+            )
+
+        # the index had no covered file, so only pairs with a new file can
+        stale = {e[0] for e in entries if covered(e, new)} | {e[0] for e in new if covered(e, entries)}
+        for name in stale:
+            with suppress(OSError):
+                os.remove(os.path.join(d, name))
+        ids = self._ids.get(key)
+        if ids is not None:
+            for name, _, _ in new:
+                if name not in stale:
+                    ids.update(self._read_ids(os.path.join(d, name)))
+        ranges = sorted((e for e in entries if e[0] not in stale), key=lambda e: e[1])
+        self._ranges[key] = ranges
         return ranges
 
     def _snapshot_ranges(self, user_id: str, stream_id: str) -> list[tuple[str, int, int]]:
-        """Thread-safe copy of the stream's file ranges (the read-path
-        entry; mirrors the reference's read-under-stream-mutex,
-        server.rs:168-175, without holding the lock during I/O)."""
+        """A copy of the stream's file index after one listing (the
+        read-path entry; mirrors the reference's read-under-stream-
+        mutex, server.rs:168-175, without holding the lock during I/O)."""
         with self._lock(user_id, stream_id):
             return list(self._file_ranges(user_id, stream_id))
 
-    def _invalidate(self, user_id: str, stream_id: str) -> None:
-        """Drop caches so the next access re-reads the directory —
-        the self-heal path when files changed outside this instance
-        (external compaction, a second writer)."""
-        with self._lock(user_id, stream_id):
-            self._forget((user_id, stream_id))
+    def _read(self, user_id: str, stream_id: str, body):
+        """``body(ranges)`` over a fresh snapshot of the file index. A
+        file that vanished under the read (a footer or data read
+        raising FileNotFoundError: another instance compacted or
+        deleted) retries once against a fresh listing."""
+        try:
+            return body(self._snapshot_ranges(user_id, stream_id))
+        except FileNotFoundError:
+            return body(self._snapshot_ranges(user_id, stream_id))
 
     def revision(self, user_id: str, stream_id: str) -> int:
-        """Event count of the stream (reference db.rs:103-113). Reads
-        parquet FOOTER metadata only — no data scan."""
-        key = (user_id, stream_id)
-        if key in self._hwm:
-            return self._hwm[key]
-        with self._lock(*key):
-            total = sum(n for _, _, n in self._file_ranges(*key))
-            self._hwm[key] = total
-            return total
+        """Event count of the stream (reference db.rs:103-113): the
+        end of the file index's last entry — no data scan."""
+        return self._read(user_id, stream_id, _end)
 
     # -- append (A1/A4) -----------------------------------------------
 
@@ -467,12 +433,11 @@ class EventStore:
         if not batch:
             raise EmptyAppend("append batch must be non-empty")
 
-        def gate(current: int) -> list[dict[str, Any]]:
+        def gate(current: int, held: set[tuple[str, str]]) -> list[dict[str, Any]]:
             expected.check(current)
             incoming = [_source_id(e) for e in batch]
             if len(set(incoming)) != len(incoming):
                 raise SourceIdConflict("duplicate (source, id) within batch")
-            held = self._source_ids(user_id, stream_id)
             for src, eid in incoming:
                 if (src, eid) in held:
                     raise SourceIdConflict(f"event ({src!r}, {eid!r}) already in stream")
@@ -492,8 +457,7 @@ class EventStore:
         path: a re-delivered micro-batch drops what already landed."""
         batch = _validated(events)
 
-        def gate(current: int) -> list[dict[str, Any]]:
-            held = self._source_ids(user_id, stream_id)
+        def gate(current: int, held: set[tuple[str, str]]) -> list[dict[str, Any]]:
             picked: set[tuple[str, str]] = set()
             fresh = []
             for ev in batch:
@@ -506,59 +470,59 @@ class EventStore:
         return self._write(user_id, stream_id, gate)
 
     def _write(self, user_id: str, stream_id: str, gate) -> tuple[int, int]:
-        """The one write body. Under both stream locks, against the
-        on-disk state (another process may have appended or compacted
-        since this instance last looked), ``gate(current_revision)``
-        raises or returns the events to write; they land as one file.
-        Returns ``(written, new_revision)``."""
+        """The one write body. Under both stream locks, against one
+        listing of the on-disk state (another instance may have
+        appended or compacted since this one last looked),
+        ``gate(current_revision, held_source_ids)`` raises or returns
+        the events to write; they land as one file. Returns
+        ``(written, new_revision)``."""
         key = (user_id, stream_id)
-        with self._lock(*key), self._interprocess_lock(*key):
-            self._refresh_if_changed(*key)
-            current = self.revision(*key)
-            batch = gate(current)
+        with self._exclusive(key):
+            ranges = self._file_ranges(*key)
+            current = _end(ranges)
+            held = self._source_ids(key, ranges)
+            batch = gate(current, held)
             if not batch:
                 return 0, current
             rows = self._to_arrow_rows(batch, current, datetime.now(timezone.utc))
-            self._seq += 1
-            # sortable filename: revision range + sequence → readers and
-            # compaction see files in append order
-            final = self._publish(
-                key,
-                f"part-{current:012d}-{self._seq:06d}.parquet",
-                pa.Table.from_pydict(rows, schema=_ARROW_SCHEMA),
-            )
-            self._hwm[key] = current + len(batch)
-            self._source_ids(*key).update(_source_id(e) for e in batch)
-            self._file_ranges(*key).append((final, current, len(batch)))
-            if self.auto_compact_files is not None and len(self._ranges[key]) >= self.auto_compact_files:
-                self.compact_stream(*key)  # RLock: reentrant
+            name = _file_name(current)
+            self._publish(key, name, pa.Table.from_pydict(rows, schema=_ARROW_SCHEMA))
+            held.update(_source_id(e) for e in batch)
+            ranges.append((name, current, len(batch)))
+            if self.auto_compact_files is not None and len(ranges) >= self.auto_compact_files:
+                self._compact(key, ranges)
             return len(batch), current + len(batch)
 
-    def _publish(self, key: tuple[str, str], fname: str, table: pa.Table) -> str:
-        """Write ``table`` to a temporary file unique to this call, then
-        rename it to ``fname`` (atomic publish). Two attempts of one
-        write (a speculative or retried Spark task) never share a tmp
-        path, so neither can interleave into a corrupt file."""
+    def _publish(self, key: tuple[str, str], name: str, table: pa.Table) -> None:
+        """Write ``table`` to a temporary file, then rename it to
+        ``name`` (atomic publish). Names are unique per call, so two
+        attempts of one write (a speculative or retried Spark task)
+        never share a tmp path."""
         d = self._stream_dir(*key)
         os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".{fname}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
+        tmp = os.path.join(d, f".{name}.tmp")
         pq.write_table(table, tmp, compression="zstd")
-        final = os.path.join(d, fname)
-        os.rename(tmp, final)
-        return final
+        os.rename(tmp, os.path.join(d, name))
 
-    def _source_ids(self, user_id: str, stream_id: str) -> set[tuple[str, str]]:
-        """The stream's (source, id) set — hydrated once from a
-        columnar (source, id)-only read, then maintained on append."""
-        key = (user_id, stream_id)
+    def _source_ids(
+        self, key: tuple[str, str], ranges: list[tuple[str, int, int]]
+    ) -> set[tuple[str, str]]:
+        """The stream's (source, id) set — read once from ``ranges``
+        with a columnar (source, id)-only read, then kept up to date by
+        appends and ``_file_ranges``."""
         ids = self._ids.get(key)
         if ids is None:
+            d = self._stream_dir(*key)
             ids = set()
-            for path, _, _ in self._file_ranges(user_id, stream_id):
-                t = pq.read_table(path, columns=["source", "id"])
-                ids.update(zip(t.column("source").to_pylist(), t.column("id").to_pylist()))
+            for name, _, _ in ranges:
+                ids.update(self._read_ids(os.path.join(d, name)))
             self._ids[key] = ids
         return ids
+
+    @staticmethod
+    def _read_ids(path: str) -> Iterable[tuple[str, str]]:
+        t = pq.read_table(path, columns=["source", "id"])
+        return zip(t.column("source").to_pylist(), t.column("id").to_pylist())
 
     @staticmethod
     def _to_arrow_rows(
@@ -589,10 +553,6 @@ class EventStore:
 
     # -- reads (A2/A3) ------------------------------------------------
 
-    def _require_stream(self, user_id: str, stream_id: str) -> None:
-        if not self._stream_exists(user_id, stream_id):
-            raise StreamNotFound(f"{user_id}/{stream_id}")
-
     def read_df(
         self, user_id: str, stream_id: str, until_revision: int | None = None
     ) -> DataFrame:
@@ -604,7 +564,8 @@ class EventStore:
         pure predicate (monotone data ⇒ every historical state is a
         prefix), which parquet min/max stats prune to the first files;
         no snapshot/undo machinery exists or is needed."""
-        self._require_stream(user_id, stream_id)
+        if not self._read(user_id, stream_id, bool):
+            raise StreamNotFound(f"{user_id}/{stream_id}")
         df = self.spark.read.parquet(self._stream_dir(user_id, stream_id))
         if until_revision is not None:
             df = df.where(F.col("revision") < int(until_revision))
@@ -617,52 +578,44 @@ class EventStore:
         api.rs:268-308). Default limit 50, capped at 1000
         (api.rs:271-272). Missing stream → empty (db.rs:136-138).
 
-        Positional access = revision-range predicate: parquet row-group
-        min/max stats on the sorted `revision` column give the same
-        O(1)-seek behavior the reference gets from index.dat."""
+        Positional access is file-level: the file index maps revision
+        windows to files, so only the files overlapping
+        ``[start, start + limit)`` are opened, and row-group min/max
+        stats on the sorted ``revision`` column prune within them. A
+        compacted stream is one file, which the read then opens whole."""
+        return self._read(user_id, stream_id, lambda r: self._page(user_id, stream_id, r, start, limit))
+
+    def _page(
+        self, user_id: str, stream_id: str, ranges: list[tuple[str, int, int]], start: int, limit: int
+    ) -> list[dict[str, Any]]:
         # clamp BOTH bounds for library callers (the HTTP layer clamps
         # too, reference api.rs:271-272): a negative start would make
         # end < 0 and silently return [] for an existing stream
         start = max(int(start), 0)
-        limit = min(max(int(limit), 0), 1000)
-        if not self._stream_exists(user_id, stream_id):
+        end = start + min(max(int(limit), 0), 1000)
+        d = self._stream_dir(user_id, stream_id)
+        files = [os.path.join(d, name) for name, first, n in ranges if first < end and first + n > start]
+        if not files:
             return []
-        # file-level positional pruning: only files overlapping
-        # [start, start+limit) are opened — a point read touches ONE
-        # file no matter how many micro-batches the stream holds
-        end = start + limit
-        for attempt in (0, 1):
-            files = [
-                p
-                for p, file_start, n in self._snapshot_ranges(user_id, stream_id)
-                if file_start < end and file_start + n > start
-            ]
-            if not files:
-                return []
-            try:
-                # pyarrow dataset fast path: small interactive read,
-                # predicate pushed to row-group pruning; Spark path
-                # available via read_df()
-                ds = pa_ds.dataset(files, format="parquet")
-                filt = (pa_ds.field("revision") >= start) & (pa_ds.field("revision") < end)
-                t = ds.to_table(filter=filt).sort_by("revision")
-                return self._rows_to_events(t)
-            except FileNotFoundError:
-                if attempt:  # pragma: no cover — second pass re-read fresh state
-                    raise
-                # files changed under us (external compaction/writer):
-                # drop caches and retry once against the directory
-                self._invalidate(user_id, stream_id)
-        return []  # pragma: no cover
+        # pyarrow dataset fast path: small interactive read, predicate
+        # pushed to row-group pruning; Spark path available via read_df()
+        filt = (pa_ds.field("revision") >= start) & (pa_ds.field("revision") < end)
+        t = pa_ds.dataset(files, format="parquet").to_table(filter=filt).sort_by("revision")
+        return self._rows_to_events(t)
 
     def get_event(self, user_id: str, stream_id: str, rownum: int) -> dict[str, Any] | None:
         """Point read by 0-based position (reference db.rs:132-177 via
         server.rs:154-166). Unknown stream raises StreamNotFound (404);
         past-the-end returns None (deliberate deviation from the
         reference's 500 quirk — SURVEY.md §2 error table)."""
-        self._require_stream(user_id, stream_id)
-        rows = self.query(user_id, stream_id, start=rownum, limit=1)
-        return rows[0] if rows else None
+
+        def point(ranges):
+            if not ranges:
+                raise StreamNotFound(f"{user_id}/{stream_id}")
+            rows = self._page(user_id, stream_id, ranges, rownum, 1)
+            return rows[0] if rows else None
+
+        return self._read(user_id, stream_id, point)
 
     @staticmethod
     def _rows_to_events(t: pa.Table) -> list[dict[str, Any]]:
@@ -715,7 +668,6 @@ class EventStore:
 
     def get_stream(self, user_id: str, stream_id: str) -> dict[str, Any]:
         """Single-stream metadata (reference server.rs:232-248)."""
-        self._require_stream(user_id, stream_id)
         meta = self._metadata(user_id, stream_id)
         if meta is None:
             raise StreamNotFound(f"{user_id}/{stream_id}")
@@ -723,34 +675,34 @@ class EventStore:
 
     def _metadata(self, user_id: str, stream_id: str) -> dict[str, Any] | None:
         """``(id, revision, last_modified, usage)`` from the file index
-        and file stats, or None when the stream has no files — or a
-        concurrent delete/compaction swapped them out from under the
-        stat, in which case the stale caches are dropped too."""
-        ranges = self._snapshot_ranges(user_id, stream_id)
-        try:
-            stats = [os.stat(p) for p, _, _ in ranges]
-        except FileNotFoundError:
-            stats = []
-        if not stats:
-            self._invalidate(user_id, stream_id)
-            return None
-        return {
-            "id": stream_id,
-            "revision": sum(n for _, _, n in ranges),
-            "last_modified": int(max(s.st_mtime for s in stats)),
-            "usage": sum(s.st_size for s in stats),
-        }
+        and file stats, or None when the stream has no files."""
+        d = self._stream_dir(user_id, stream_id)
+
+        def meta(ranges):
+            if not ranges:
+                return None
+            stats = [os.stat(os.path.join(d, name)) for name, _, _ in ranges]
+            return {
+                "id": stream_id,
+                "revision": _end(ranges),
+                "last_modified": int(max(s.st_mtime for s in stats)),
+                "usage": sum(s.st_size for s in stats),
+            }
+
+        return self._read(user_id, stream_id, meta)
 
     def delete_stream(self, user_id: str, stream_id: str) -> bool:
         """Drop the stream's partition (reference server.rs:250-261).
         Returns False for unknown streams, like the reference."""
-        with self._lock(user_id, stream_id):
-            d = self._stream_dir(user_id, stream_id)
+        key = (user_id, stream_id)
+        d = self._stream_dir(*key)
+        with self._lock(*key):
             if not os.path.isdir(d):
                 return False
-            with self._interprocess_lock(user_id, stream_id):
+            with self._lock_provider.exclusive(d):
                 shutil.rmtree(d)
-            self._forget((user_id, stream_id))
+            self._ranges.pop(key, None)
+            self._ids.pop(key, None)
             return True
 
     # -- whole-table access -------------------------------------------
@@ -770,27 +722,27 @@ class EventStore:
         stats stay tight. Returns the file count before compaction
         (after dropping an interrupted compaction's covered leftovers)."""
         key = (user_id, stream_id)
-        with self._lock(*key), self._interprocess_lock(*key):
-            self._refresh_if_changed(*key)
-            # the reconciled index, never the raw listing: a covered
-            # leftover of an interrupted compaction would fold back in
-            files = [p for p, _, _ in self._file_ranges(*key)]
-            if len(files) <= 1:
-                return len(files)
-            t = pa_ds.dataset(files, format="parquet").to_table().sort_by("revision")
-            # the compacted name must not collide with ANY source file
-            # (a fresh instance's _seq can repeat an on-disk seq; the
-            # rename would overwrite a source and the removal loop
-            # would then delete the compacted file): derive the seq
-            # from the directory, past the largest existing one
-            max_seq = max(int(os.path.basename(f).rsplit("-", 1)[1].split(".")[0]) for f in files)
-            self._seq = max(self._seq, max_seq) + 1
-            # crash-atomic ordering: publish the compacted file FIRST,
-            # then remove the sources. A crash in between leaves
-            # duplicates, which _file_ranges reconciles (covered-file
-            # cleanup); remove-first would lose the stream entirely.
-            final = self._publish(key, f"part-{0:012d}-{self._seq:06d}.parquet", t)
-            for f in files:
-                os.remove(f)
-            self._ranges[key] = [(final, 0, t.num_rows)]
-            return len(files)
+        with self._exclusive(key):
+            return self._compact(key, self._file_ranges(*key))
+
+    def _compact(self, key: tuple[str, str], ranges: list[tuple[str, int, int]]) -> int:
+        """The compaction body over the reconciled index ``ranges``
+        (never the raw listing: a covered leftover of an interrupted
+        compaction would fold back in). Callers hold both locks."""
+        if len(ranges) <= 1:
+            return len(ranges)
+        d = self._stream_dir(*key)
+        paths = [os.path.join(d, name) for name, _, _ in ranges]
+        t = pa_ds.dataset(paths, format="parquet").to_table().sort_by("revision")
+        # crash-atomic ordering: publish the compacted file FIRST,
+        # then remove the sources. A crash in between leaves
+        # duplicates, which _file_ranges reconciles (covered-file
+        # cleanup); remove-first would lose the stream entirely.
+        name = _file_name(0)
+        self._publish(key, name, t)
+        for path in paths:
+            # another instance's reconcile may have removed it already
+            with suppress(FileNotFoundError):
+                os.remove(path)
+        self._ranges[key] = [(name, 0, t.num_rows)]
+        return len(ranges)

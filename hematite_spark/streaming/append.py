@@ -8,10 +8,13 @@ the task appends it through ``EventStore.append_new``, the store's
 OCC-gated, per-stream-serialized write path. Streaming ingestion
 therefore gets the same ordering and uniqueness guarantees as the
 request-path API (reference E1 lifecycle, SURVEY.md §3), honours the
-store's lock provider, and runs the store's auto-compaction. Order
-within a group follows the source's `ingest_order` column when
-present — the arrival-order authority the reference gets from
-request serialization (README.md:8 "strictly ordered by arrival").
+store's lock provider, and runs the store's auto-compaction. The
+caller's store needs no notice of what the tasks wrote: every store
+call lists the stream's directory, so its next read sees the new
+files. Order within a group follows the source's `ingest_order`
+column when present — the arrival-order authority the reference gets
+from request serialization (README.md:8 "strictly ordered by
+arrival").
 
 Scale: foreachBatch runs on the driver but only COORDINATES — the
 micro-batch itself never reaches the driver; only a one-row-per-
@@ -134,17 +137,11 @@ def stream_append_to_store(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # only the one-row-per-stream summary reaches the driver; the
-        # driver's store instance then drops its caches for the
-        # touched streams so its next read sees the executor-written
-        # files
-        summaries = (
-            batch_df.groupBy("user_id", "stream_id")
-            .applyInPandas(appender, schema=_SUMMARY_SCHEMA)
-            .collect()
-        )
-        for row in summaries:
-            if row["appended"]:
-                store._invalidate(row["user_id"], row["stream_id"])
+        # caller's store sees the executor-written files on its next
+        # call, which lists the stream's directory
+        batch_df.groupBy("user_id", "stream_id").applyInPandas(
+            appender, schema=_SUMMARY_SCHEMA
+        ).collect()
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

@@ -253,6 +253,34 @@ def test_keepalive_survives_get_delete_with_body(api):
         conn.close()
 
 
+def test_unexpected_store_error_is_a_500_on_a_live_connection():
+    """An exception no route handles (here an OSError from the store)
+    gets a JSON:API 500, and the keep-alive connection stays usable."""
+    import http.client
+
+    class FailingStore:
+        def query(self, *args, **kwargs):
+            raise OSError("storage unavailable")
+
+    server = HematiteServer(FailingStore(), port=0, verifier=ES384Verifier([jwk_from_public(_PUB)]))
+    server.start_background()
+    host, port = server.server_address
+    conn = http.client.HTTPConnection(host, port)
+    try:
+        conn.request("GET", "/streams/s/events", headers={"Authorization": f"Bearer {_token('user-1')}"})
+        r = conn.getresponse()
+        body = json.loads(r.read())
+        assert r.status == 500
+        assert body["errors"][0]["status"] == "500"
+        assert "storage unavailable" not in json.dumps(body)  # no internals leak
+        conn.request("GET", "/health")
+        r = conn.getresponse()
+        assert r.status == 200 and json.loads(r.read()) == {"status": "pass"}
+    finally:
+        conn.close()
+        server.shutdown()
+
+
 def test_server_refuses_to_start_without_verifier(tmp_path):
     """The server has no unauthenticated mode: no verifier, no start."""
     store = EventStore(None, str(tmp_path / "store"))

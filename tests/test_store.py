@@ -51,7 +51,7 @@ def test_occ_no_stream_errors_on_nonempty(store):
         store.append(U, S, minimal_event("b"), ExpectedRevision.NO_STREAM)
 
 
-def test_occ_stream_exists_errors_on_empty(store):
+def test_occ_stream_must_exist_errors_on_empty(store):
     # db.rs:337-345
     with pytest.raises(RevisionMismatch):
         store.append(U, S, minimal_event(), ExpectedRevision.STREAM_EXISTS)
@@ -238,8 +238,8 @@ def test_compaction_preserves_order(store):
 
 def test_external_compaction_self_heals(store, tmp_path):
     """A second EventStore instance compacting the same stream must
-    not break this instance's cached read path — the query retries
-    against the directory after FileNotFoundError."""
+    not break this instance's read path — the next read's listing
+    replaces the removed files with the compacted one."""
     from hematite_spark.store import EventStore
 
     for i in range(10):
@@ -249,6 +249,28 @@ def test_external_compaction_self_heals(store, tmp_path):
     assert other.compact_stream("u", "s") == 10  # removes cached files
     assert store.get_event("u", "s", 5)["id"] == "e-5"  # self-heal
     assert len(store.query("u", "s", 0, 100)) == 10
+
+
+def test_read_retries_once_when_a_file_vanishes(store, monkeypatch):
+    """A file removed between a read's listing and its footer or data
+    read (another instance compacted) costs one retry against a fresh
+    listing, not an error."""
+    from hematite_spark.store import EventStore
+
+    for i in range(4):
+        store.append("u", "s", minimal_event(f"e-{i}"))
+    stale = store._snapshot_ranges("u", "s")
+    assert EventStore(None, store.root).compact_stream("u", "s") == 4
+    snapshot = store._snapshot_ranges
+    calls = []
+
+    def listed_before_the_compaction(*key):
+        calls.append(key)
+        return stale if len(calls) == 1 else snapshot(*key)
+
+    monkeypatch.setattr(store, "_snapshot_ranges", listed_before_the_compaction)
+    assert store.get_event("u", "s", 2)["id"] == "e-2"
+    assert len(calls) == 2
 
 
 def test_concurrent_readers_and_writer_consistent(store):
@@ -350,12 +372,11 @@ def test_auto_compaction_bounds_file_count(spark, tmp_path):
 # -- multi-instance / multi-writer contract ---------------------------
 
 
-def test_two_instances_stale_cache_and_self_heal(tmp_path):
+def test_two_instances_see_each_others_appends(tmp_path):
     """Two EventStore instances on one root (the two-process shape).
-    A fresh instance hydrates from disk and continues gaplessly; an
-    instance that missed another writer's file is STALE until
-    `_invalidate` re-reads the directory — the documented self-heal
-    hook for external writers."""
+    A fresh instance hydrates from disk and continues gaplessly, and
+    the instance that did not write sees the other's file on its next
+    call: every call lists the stream's directory, with no hook."""
     root = str(tmp_path / "shared")
     a = EventStore(None, root)
     b = EventStore(None, root)
@@ -363,10 +384,7 @@ def test_two_instances_stale_cache_and_self_heal(tmp_path):
     # fresh instance hydrates from the directory: appends continue
     assert b.revision(U, S) == 5
     b.append(U, S, [minimal_event(f"b{i}", source="B") for i in range(5)])
-    # the instance that didn't write is stale (in-process caches)...
-    assert a.revision(U, S) == 5
-    # ...and self-heals via _invalidate: reads see all 10, gapless
-    a._invalidate(U, S)
+    # the instance that didn't write reads all 10, gapless
     assert a.revision(U, S) == 10
     assert [e["_revision"] for e in a.query(U, S, 0, 20)] == list(range(10))
     # negative start clamps to 0 (library-caller path)
