@@ -100,12 +100,6 @@ def table_bytes(name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
     return total
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-
-
 _ENVELOPE_ATTRS = (
     "specversion",
     "id",

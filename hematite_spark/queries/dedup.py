@@ -23,7 +23,7 @@ from __future__ import annotations
 import math
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hematite_spark.functions import norm_text as _norm_text
@@ -226,21 +226,38 @@ def _coshingle_common(sh: DataFrame, sf_dir: str, sh_b: DataFrame | None = None)
 
 
 # Above this many candidate PAIRS the candidate-doc semi-filters stop
-# hinting F.broadcast and fall back to a shuffled left-semi join
-# (VERDICT r11 item 4: an adversarial dup-mass corpus must not
-# materialize an unbounded distinct on the driver). The doc lists are
-# ≤ 2·pairs 8-byte keys, so the gate bounds the broadcast at ~80 MB —
-# comfortably inside executor/driver memory — while every probed scale
-# (x256 candidates ≈ 184k) stays far below it, keeping the
-# deterministic broadcast-probe plan the hint exists for (AQE raced
-# plan adaptation: see dedup_lsh_verified). One cheap count on an
-# already-localCheckpointed cands frame, never a plan-build job.
+# hinting F.broadcast and fall back to a shuffled left-semi join: an
+# adversarial dup-mass corpus must not materialize an unbounded
+# distinct on the driver. The doc lists are ≤ 2·pairs 8-byte keys, so
+# the gate bounds the broadcast at ~80 MB — comfortably inside
+# executor/driver memory — while every probed scale (x256 candidates
+# ≈ 184k) stays far below it, keeping the deterministic
+# broadcast-probe plan the hint exists for (AQE raced plan
+# adaptation: see dedup_lsh_verified). The pair count comes from the
+# candidate checkpoint's own job (_cand_checkpoint), never a job of
+# its own.
 _CAND_BC_MAX_PAIRS = 5_000_000
+
+
+def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``(df.localCheckpoint(), its row count)``: the count is an
+    Observation on the checkpoint's own job, so a size gate after a
+    checkpoint costs no second job."""
+    rows = Observation()
+    cp = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return cp, rows.get["n"]
+
+
+def _cand_checkpoint(cands: DataFrame) -> tuple[DataFrame, bool]:
+    """``cands`` localCheckpointed, with the broadcast hint of its
+    candidate-doc semi-filters (see _CAND_BC_MAX_PAIRS)."""
+    cp, rows = _counted_checkpoint(cands)
+    return cp, rows <= _CAND_BC_MAX_PAIRS
 
 
 def _cand_doc_semi(sh: DataFrame, cands: DataFrame, col: str, hint_broadcast: bool) -> DataFrame:
     """``sh`` LEFT-SEMI filtered to the docs appearing in ``cands.col``
-    — the candidate-bounding kernel (round 11, dedup_lsh_verified):
+    — the candidate-bounding kernel (see dedup_lsh_verified):
     downstream joins then carry O(candidate docs × shingles/doc),
     proportional to actual near-duplicate mass, never O(corpus
     shingles). Broadcast hint is size-gated (see _CAND_BC_MAX_PAIRS)."""
@@ -253,15 +270,11 @@ def _cand_doc_semi(sh: DataFrame, cands: DataFrame, col: str, hint_broadcast: bo
 def _cand_union_shingles(sh: DataFrame, cands: DataFrame, hint_broadcast: bool) -> DataFrame:
     """``sh`` LEFT-SEMI filtered to the docs appearing on EITHER side
     of ``cands`` — the bounded frame the audit entries checkpoint
-    INSTEAD of the full exploded shingle scan (round 13, VERDICT r12
-    item 1: lsh_band_auc/minhash_bbit_estimate localCheckpointed the
-    corpus × k-gram frame — the widest thing those queries ever hold —
-    and the r12 driver bench measured band_auc at 8.82 s median /
-    14.4 s max at local[32] vs 2.40 s at 8 cores under the retained-
-    block pressure). This frame is O(candidate-doc shingles) —
-    proportional to actual near-dup mass — and deriving the per-side
-    filters from it is byte-identical set algebra:
-    (sh ⋉ (A∪B)) ⋉ A = sh ⋉ A."""
+    INSTEAD of the full exploded shingle scan (corpus × k-grams, the
+    widest frame those queries would ever hold). This frame is
+    O(candidate-doc shingles) — proportional to actual near-dup mass —
+    and deriving the per-side filters from it is byte-identical set
+    algebra: (sh ⋉ (A∪B)) ⋉ A = sh ⋉ A."""
     docs = (
         cands.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
@@ -272,28 +285,21 @@ def _cand_union_shingles(sh: DataFrame, cands: DataFrame, hint_broadcast: bool) 
     return sh.join(docs, "doc_id", "left_semi")
 
 
-def _cand_bounded_truth(
-    sh: DataFrame, cands: DataFrame, sf_dir: str, hint: bool | None = None
-) -> DataFrame:
+def _cand_bounded_truth(sh: DataFrame, cands: DataFrame, sf_dir: str, hint: bool) -> DataFrame:
     """Exact shingle Jaccard ``(doc_a, doc_b, jac)`` for (at least)
     every pair in ``cands`` — the truth side of the LSH audit family,
-    CANDIDATE-BOUNDED (VERDICT r11 item 1: minhash_jaccard_audit /
-    lsh_band_auc used to run the co-shingle pair join over the FULL
-    shingle table and then left-join down to candidates, computing and
-    discarding every non-candidate pair's common count — a 2.11
-    measured wall-doubling at ×128). Both shingle sides are first
-    semi-filtered to candidate docs (doc-level filter, so per-doc
-    shingle sizes and per-pair common counts are UNCHANGED for every
-    candidate pair — callers that left-join from the candidate set get
-    byte-identical output by construction; extra pairs among candidate
-    docs that never banded together are discarded by that join).
+    CANDIDATE-BOUNDED: running the co-shingle pair join over the FULL
+    shingle table and then left-joining down to candidates computes
+    and discards every non-candidate pair's common count. Both shingle
+    sides are first semi-filtered to candidate docs (doc-level filter,
+    so per-doc shingle sizes and per-pair common counts are UNCHANGED
+    for every candidate pair — callers that left-join from the
+    candidate set get byte-identical output by construction; extra
+    pairs among candidate docs that never banded together are
+    discarded by that join).
 
-    ``cands`` must be localCheckpointed by the caller (it is counted
-    for the broadcast gate and fans out to both semi-filters).
-    ``hint`` lets a caller that already ran the broadcast-gate count
-    pass it in instead of paying a second count job."""
-    if hint is None:
-        hint = cands.count() <= _CAND_BC_MAX_PAIRS
+    ``cands`` and ``hint`` come from _cand_checkpoint (``cands`` fans
+    out to both semi-filters)."""
     sh_a = _cand_doc_semi(sh, cands, "doc_a", hint)
     sh_b = _cand_doc_semi(sh, cands, "doc_b", hint)
     sizes_a = sh_a.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -493,61 +499,57 @@ ORDER BY keeper_doc_id
 )
 
 
-def lsh_candidate_pairs(
-    spark: SparkSession, sf_dir: str, tmps: list | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH banding: 4 bands × 2 rows. A pair is a candidate if
-    any band matches — candidate generation is a union of equi-joins
-    on band keys (pure shuffle joins, no similarity math until the
-    verify step). Returns candidate pairs with their matching-band
-    count; downstream, dedup_ngram_jaccard-style verification prunes
-    false positives. ``tmps`` collects the internal bands checkpoint
-    for callers that re-materialize the output and can release it
-    (see _lsh_candidates_from)."""
-    return _lsh_candidates_from(_minhash_signatures(spark, sf_dir), tmps).orderBy(
-        "doc_a", "doc_b"
+    any band matches — candidate generation is an equi-join on band
+    keys (a pure shuffle join, no similarity math until the verify
+    step). Returns candidate pairs with their matching-band count,
+    ordered; downstream, dedup_ngram_jaccard-style verification prunes
+    false positives."""
+    return _lsh_candidates(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lsh_candidate_pairs unordered — what every internal consumer
+    reads (none of them uses the order)."""
+    return _lsh_candidates_from(_minhash_signatures(spark, sf_dir))
+
+
+def _band_stack(sigs: DataFrame, b: int = N_MINHASH // 2, r: int = 2) -> DataFrame:
+    """One row per document and LSH band: ``(…, band, h)`` with
+    ``h = md5(mh_{r·band} || '|' || … )`` over the band's ``r`` lanes —
+    the oracle's band key. Every column of ``sigs`` other than the
+    lanes rides along. A null lane (a doc too short to shingle) gives
+    a null ``h``, which equi-joins with nothing, as in the oracle;
+    concat_ws would fold them all to md5('') and explode into an O(n²)
+    short-doc clique."""
+    keep = [c for c in sigs.columns if not c.startswith("mh")]
+    lanes = (" || '|' || ".join(f"mh{r * i + j}" for j in range(r)) for i in range(b))
+    bands = ", ".join(f"struct({i} AS band, md5({ln}) AS h)" for i, ln in enumerate(lanes))
+    return sigs.selectExpr(*keep, f"inline(array({bands}))")
+
+
+def _lsh_candidates_from(sigs: DataFrame, b: int = N_MINHASH // 2, r: int = 2) -> DataFrame:
+    """(doc_a, doc_b, n_bands) — the b×r banding funnel over a
+    signature frame, unordered and distinct on (doc_a, doc_b): ONE
+    self-join of the band stack on (band, h). Both join sides are the
+    same plan, so Spark computes the signature exchange once and
+    reuses it (ReusedExchange) — no materialization of the bands is
+    needed. The audit entries feed it signatures derived from their
+    own shingle scan, so one run shingles the corpus once for both
+    the banding and the exact-Jaccard truth side."""
+    st = _band_stack(sigs, b, r)
+    a, c = st.alias("a"), st.alias("c")
+    on = (
+        (F.col("a.band") == F.col("c.band"))
+        & (F.col("a.h") == F.col("c.h"))
+        & (F.col("a.doc_id") < F.col("c.doc_id"))
     )
-
-
-def _lsh_candidates_from(sigs: DataFrame, tmps: list | None = None) -> DataFrame:
-    """(doc_a, doc_b, n_bands) — the 4×2 banding funnel over a
-    signature frame, unordered. Shared kernel (round 12): the audit
-    entries (minhash_jaccard_audit, lsh_band_auc,
-    minhash_bbit_estimate) feed it from signatures derived off their
-    own already-checkpointed shingle scan, so one run shingles the
-    corpus ONCE instead of once inside lsh_candidate_pairs plus once
-    for the exact-Jaccard truth side.
-
-    ``tmps``: optional list the kernel appends its internal bands
-    checkpoint to, so a caller that re-materializes the funnel output
-    (another localCheckpoint) can release the bands blocks the moment
-    they are dead (round 13 checkpoint lifecycle — see
-    _shared.release_checkpoint)."""
-    # concat (not concat_ws): null signatures — docs too short to
-    # shingle — must yield a NULL band that equi-joins with nothing,
-    # matching the oracle's `mh0 || '|' || mh1`. concat_ws would fold
-    # them all to md5('') and explode into an O(n²) short-doc clique.
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.col(f"mh{2*b}"), F.lit("|"), F.col(f"mh{2*b+1}"))).alias(f"band{b}")
-            for b in range(N_MINHASH // 2)
-        ],
-    ).localCheckpoint()  # feeds 2×4 join branches — materialize the
-    # signature pipeline ONCE instead of 8 recomputations
-    if tmps is not None:
-        tmps.append(bands)
-    pair_frames = []
-    for b in range(N_MINHASH // 2):
-        a, c = bands.alias("a"), bands.alias("c")
-        pair_frames.append(
-            a.join(c, (F.col(f"a.band{b}") == F.col(f"c.band{b}")) & (F.col("a.doc_id") < F.col("c.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b"))
-        )
-    allpairs = pair_frames[0]
-    for pf in pair_frames[1:]:
-        allpairs = allpairs.unionByName(pf)
-    return allpairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_bands"))
+    return (
+        a.join(c, on)
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("n_bands"))
+    )
 
 
 _LSH_BANDS = " UNION ALL ".join(
@@ -687,24 +689,18 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the job completing or not — hot shingles make the unbanded join's
     pair count quadratic in the hottest key).
 
-    Both verify joins are candidate-bounded ON BOTH SIDES (round 11:
-    the b-side used to be the FULL shingle table, sort-merge-joined
-    on (doc_id, sh) — at ×128 that sorted 256M shingle rows to serve
-    92k candidate pairs, and the sort (not the candidate count) was
-    the measured 2.3–2.6 wall-doubling; the round-10 workload
-    normalization mis-attributed it to candidate growth). Each side
-    is first LEFT-SEMI filtered to the docs that actually appear in a
-    candidate pair — a 1-column distinct small enough for AQE to
+    Both verify joins are candidate-bounded ON BOTH SIDES: a full
+    shingle b-side, sort-merge-joined on (doc_id, sh), sorts every
+    corpus shingle row to serve a few candidate pairs (at ×128: 256M
+    rows for 92k pairs, and that sort was the measured wall-doubling).
+    Each side is first LEFT-SEMI filtered to the docs that actually
+    appear in a candidate pair — a 1-column distinct small enough to
     broadcast at any near-dup-realistic scale — so every downstream
     shuffle carries O(candidate docs × shingles/doc), proportional to
     actual near-duplicate mass, never O(corpus shingles)."""
     # candidates feed the join AND both semi-filters + their size
     # aggregates — materialize the band pipeline once
-    cands = (
-        lsh_candidate_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b", "n_bands")
-        .localCheckpoint()
-    )
+    cands, hint = _cand_checkpoint(_lsh_candidates(spark, sf_dir))
     sh = _shingles_df(spark, sf_dir).localCheckpoint()
     # explicit broadcast: the doc lists are ≤ 2·|candidate pairs| 8-byte
     # keys — broadcastable whenever the pair list itself is a sane LSH
@@ -712,13 +708,8 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where the shingle side's exchange was scheduled before the
     # distinct stage finished sort-merge-joined 256M rows (x128 walls
     # 24–42 s across reps); the hint makes the broadcast-probe plan
-    # deterministic. SIZE-GATED (VERDICT r11 item 4): above
-    # _CAND_BC_MAX_PAIRS candidate pairs the hint is dropped and the
-    # semi join shuffles — an adversarial dup-mass corpus cannot
-    # materialize an unbounded distinct on the driver; the count is on
-    # the checkpointed cands frame, so it is cheap and runs no
-    # re-computation.
-    hint = cands.count() <= _CAND_BC_MAX_PAIRS
+    # deterministic. Above _CAND_BC_MAX_PAIRS candidate pairs the hint
+    # is dropped and the semi join shuffles.
     sh_a = _cand_doc_semi(sh, cands, "doc_a", hint)
     sh_b = _cand_doc_semi(sh, cands, "doc_b", hint)
     # per-doc shingle counts, also only for candidate docs (the
@@ -1332,8 +1323,8 @@ ORDER BY drop_doc
 """
 
 
-# above this many candidate edges, connected components runs as
-# distributed label propagation; below, driver-side union-find (the
+# above this many symmetric edges, connected components runs as
+# distributed star contraction; below, driver-side union-find (the
 # graph is node-count-bounded by 2×edges, so this bounds driver memory)
 _CC_DRIVER_MAX = 2_000_000
 
@@ -1542,36 +1533,44 @@ def _cc_propagate(edges: DataFrame) -> DataFrame:
     )
 
 
-def _cc_driver_side(spark: SparkSession, edges: DataFrame) -> DataFrame:
-    """Union-find over a driver-collected edge list; returns the same
-    (cluster_keeper, n_members, max_doc_id) frame as the distributed
-    path. Path-compressed, union-by-min so the root IS the keeper."""
-    parent: dict[int, int] = {}
+def _cc_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    """Per-node component labels ``(node, label = min member id)`` over
+    a pair graph ``(doc_a, doc_b)`` — the one connected-components
+    labeller. Size-adaptive, the same policy Catalyst applies to join
+    sides: a near-dup graph is a tiny fraction of the corpus (only
+    near-dup docs appear), so when it fits on the driver (≤
+    _CC_DRIVER_MAX symmetric edges, counted by the edge checkpoint's
+    own job) a path-compressed, union-by-min union-find solves it in
+    one pass — supersteps' per-job latency would dominate otherwise.
+    Above it the distributed star contraction (_cc_propagate) runs;
+    both compute the minimum node id per component."""
+    edges, n_edges = _counted_checkpoint(
+        pairs.unionByName(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
+    )  # materialize ONCE — supersteps must not recompute the pair build
+    if n_edges <= _CC_DRIVER_MAX:
+        parent: dict[int, int] = {}
 
-    def find(x: int) -> int:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
+        def find(x: int) -> int:
+            root = x
+            while parent.setdefault(root, root) != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
 
-    for a, b in edges.collect():
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo  # union by min → root = min doc_id
-    clusters: dict[int, list[int]] = {}
-    for node in parent:
-        clusters.setdefault(find(node), []).append(node)
-    rows = [
-        (root, len(members), max(members))
-        for root, members in clusters.items()
-        if len(members) > 1
-    ]
-    return spark.createDataFrame(
-        sorted(rows), "cluster_keeper bigint, n_members bigint, max_doc_id bigint"
-    )
+        for a, b in edges.collect():
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo  # union by min → root = min doc_id
+        rows = sorted((node, find(node)) for node in parent)
+        release_checkpoint(edges)  # labels live on the driver now
+        return spark.createDataFrame(rows, "node bigint, label bigint")
+    labels = _cc_propagate(edges)
+    # the contraction ran to its fixpoint eagerly; labels reads only
+    # the final cycle's checkpoint, so the input edge blocks are dead
+    release_checkpoint(edges)
+    return labels
 
 
 def dedup_connected_components(
@@ -1580,27 +1579,16 @@ def dedup_connected_components(
     """Transitive near-dup clusters: connected components over the
     LSH candidate-pair graph — the step that turns pairwise candidates
     into actual dedup decisions (one keeper per cluster, even when
-    A~B~C but A≁C directly).
+    A~B~C but A≁C directly). Clusters are _cc_labels' labels grouped:
+    keeper = the component minimum.
 
-    Iterative CONTRACTION (_cc_propagate): every round relabels each
-    edge-bearing node to min(self, neighbors) with a pointer jump,
-    then rewrites the edge list onto the new representatives — the
-    hash-to-min / star-contraction family, O(log n) rounds with
-    per-round cost shrinking as the quotient graph collapses, robust
-    to adversarial id layouts along chains (see _cc_propagate's
-    round-8 history). Each round is two keyed joins + one aggregate
-    — the Pregel pattern on DataFrames — and lineage is cut per
-    iteration (localCheckpoint + stats reset) so plans don't nest.
-    Near-dup graphs are overwhelmingly tiny components, so this
-    converges in 2-4 rounds regardless of corpus size.
-
-    Size-adaptive execution, the same policy Catalyst applies to join
-    sides: the candidate-pair graph is a tiny fraction of the corpus
-    (only near-dup docs appear), so when it fits comfortably on the
-    driver (< _CC_DRIVER_MAX edges) union-find solves it there in one
-    pass — supersteps' per-job latency would dominate otherwise. Above
-    the threshold, distributed min-label propagation runs; identical
-    output either way (both compute min-node-id per component).
+    The distributed path (_cc_propagate) is iterative star
+    contraction, O(log² n) rounds robust to adversarial id layouts
+    along chains; each round is keyed joins + one aggregate — the
+    Pregel pattern on DataFrames — and lineage is cut per iteration
+    (localCheckpoint + stats reset) so plans don't nest. Near-dup
+    graphs are overwhelmingly tiny components, so the driver
+    union-find takes them at any probed scale.
 
     The oracle computes the same fixpoint as a recursive CTE —
     checking an iterative distributed algorithm against a declarative
@@ -1609,25 +1597,11 @@ def dedup_connected_components(
     `pairs` lets callers that already computed the candidate graph
     (corpus_pipeline) pass it in, so the LSH build — the expensive
     stage — runs once, not once per consumer."""
-    tmps: list[DataFrame] = []
     if pairs is None:
-        pairs = lsh_candidate_pairs(spark, sf_dir, tmps).select("doc_a", "doc_b")
-    edges = (
-        pairs.unionByName(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
-        .localCheckpoint()  # materialize ONCE — supersteps must not recompute LSH
-    )
-    release_checkpoint(*tmps)  # bands blocks are dead once edges exist
-    n_edges = edges.count()
-    if n_edges <= _CC_DRIVER_MAX:
-        out = _cc_driver_side(spark, edges)
-        release_checkpoint(edges)  # result lives on the driver now
-        return out
-    labels = _cc_propagate(edges)
-    # the contraction ran to its fixpoint eagerly; labels reads only
-    # the final cycle's checkpoint, so the input edge blocks are dead
-    release_checkpoint(edges)
+        pairs = _lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     return (
-        labels.groupBy("label")
+        _cc_labels(spark, pairs)
+        .groupBy("label")
         .agg(F.count("*").alias("n_members"), F.max("node").alias("max_doc_id"))
         .where(F.col("n_members") > 1)
         .select(F.col("label").alias("cluster_keeper"), "n_members", "max_doc_id")
@@ -1982,62 +1956,35 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the accepted corpus' band table is the big side but it is
     NEVER rebuilt — in production it's a materialized index keyed by
     band (here both sides derive from one signature pass for oracle
-    parity). Each band is one equi-join of O(batch) probe rows
-    against the band-bucketed index — at 100 TB the index is
-    bucketed/partitioned BY the band key, so the probe is a
-    partition-pruned lookup, and batch-vs-batch dedup stays O(batch).
+    parity). The batch's band stack is one equi-join on (band, h)
+    against the whole stack — O(batch) probe rows against the
+    band-bucketed index; at 100 TB the index is bucketed/partitioned
+    BY the band key, so the probe is a partition-pruned lookup, and
+    batch-vs-batch dedup stays O(batch). An accepted partner matches
+    on any band; an incoming one only when it has the lower doc_id.
     No similarity math at all until a downstream verify (the
     dedup_lsh_verified funnel applies unchanged)."""
     from hematite_spark.queries.sampling import _hash_pct
 
-    sigs = _minhash_signatures(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        _hash_pct(F.col("doc_id")).alias("hp"),
-        *[
-            F.md5(F.concat(F.col(f"mh{2*b}"), F.lit("|"), F.col(f"mh{2*b+1}"))).alias(f"band{b}")
-            for b in range(N_MINHASH // 2)
-        ],
-    ).localCheckpoint()  # one signature pass feeds 8 join branches
-    existing = bands.where(F.col("hp") < 80)
-    incoming = bands.where(F.col("hp") >= 80)
-
-    frames = []
-    for b in range(N_MINHASH // 2):
-        i, e = incoming.alias("i"), existing.alias("e")
-        frames.append(
-            i.join(e, F.col(f"i.band{b}") == F.col(f"e.band{b}"))
-            .select(
-                F.col("i.doc_id").alias("doc_id"),
-                F.col("e.doc_id").alias("partner"),
-                F.lit("existing").alias("match_type"),
-            )
-        )
-        j = incoming.alias("j")
-        frames.append(
-            i.join(
-                j,
-                (F.col(f"i.band{b}") == F.col(f"j.band{b}"))
-                & (F.col("j.doc_id") < F.col("i.doc_id")),
-            )
-            .select(
-                F.col("i.doc_id").alias("doc_id"),
-                F.col("j.doc_id").alias("partner"),
-                F.lit("incoming").alias("match_type"),
-            )
-        )
-    matches = frames[0]
-    for fr in frames[1:]:
-        matches = matches.unionByName(fr)
+    sigs = _minhash_signatures(spark, sf_dir).withColumn("hp", _hash_pct(F.col("doc_id")))
+    st = _band_stack(sigs)
+    i, e = st.where(F.col("hp") >= 80).alias("i"), st.alias("e")
+    existing = F.col("e.hp") < 80
+    on = (
+        (F.col("i.band") == F.col("e.band"))
+        & (F.col("i.h") == F.col("e.h"))
+        & (existing | ((F.col("e.hp") >= 80) & (F.col("e.doc_id") < F.col("i.doc_id"))))
+    )
+    matches = i.join(e, on).select(
+        F.col("i.doc_id").alias("doc_id"),
+        F.col("e.doc_id").alias("partner"),
+        existing.alias("existing"),
+    )
     return (
         matches.groupBy("doc_id")
         .agg(
-            F.min(F.when(F.col("match_type") == "existing", F.col("partner"))).alias(
-                "min_existing_match"
-            ),
-            F.min(F.when(F.col("match_type") == "incoming", F.col("partner"))).alias(
-                "min_incoming_match"
-            ),
+            F.min(F.when(F.col("existing"), F.col("partner"))).alias("min_existing_match"),
+            F.min(F.when(~F.col("existing"), F.col("partner"))).alias("min_incoming_match"),
             F.countDistinct("partner").alias("n_partners"),
         )
         .orderBy("doc_id")
@@ -2150,7 +2097,7 @@ def dedup_cluster_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ d(d−1)/2 from one degree aggregate. At 100 TB both are keyed
     shuffles on the candidate graph, which is orders of magnitude
     smaller than the corpus (only near-dup docs have edges)."""
-    pairs = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
+    pairs = _lsh_candidates(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.doc_b") == F.col("e2.doc_a"))
@@ -2233,34 +2180,20 @@ def minhash_jaccard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cost shape: candidate pairs only (the LSH output, never
     all-pairs); the exact-Jaccard verify is CANDIDATE-BOUNDED on both
-    shingle sides (VERDICT r11 item 1 — it used to pay the full
-    co-shingle pair mass and left-join it away: 2.11 wall-doubling at
-    a 70.3 s ×128 wall; the left join makes the bounding
-    byte-identical by construction), and the calibration rollup is
-    O(9) rows. At 100 TB you run this on a sampled slice of
-    candidates — the operator is the contract.
+    shingle sides (the left join makes the bounding byte-identical by
+    construction), and the calibration rollup is O(9) rows. At 100 TB
+    you run this on a sampled slice of candidates — the operator is
+    the contract.
 
-    Round 12 (optimization): one shingle definition feeds EVERYTHING —
-    the signatures (checkpointed: consumed by the band funnel and by
-    both sides of the estimate join) and the truth side. The old
-    shape shingled the corpus once inside lsh_candidate_pairs, once
-    for the truth, and twice more for the estimate's two signature
-    sides. Values are byte-identical (same frames, shared instead of
-    rebuilt).
-
-    Round 13 (VERDICT r12 items 1-2): the corpus-wide exploded
-    shingle frame is no longer localCheckpointed — the NARROW
-    signature frame (O(docs) × 8 short strings) is the shared
-    materialization, and the truth side checkpoints only the
-    candidate-doc-bounded shingles (byte-identical per
-    _cand_union_shingles). The bands checkpoint is released as soon
-    as the candidate list materializes."""
+    One shingle definition feeds everything: the signatures
+    (checkpointed — the NARROW O(docs) × 8 frame, consumed by the band
+    funnel and by both sides of the estimate join) and the truth side,
+    which checkpoints only the candidate-doc-bounded shingles
+    (_cand_union_shingles); the corpus-wide exploded shingle frame is
+    never materialized."""
     sh_all = _shingles_df(spark, sf_dir)
-    tmps: list[DataFrame] = []
     sigs = _minhash_sigs_from(sh_all, _minhash_wide(sf_dir)).localCheckpoint()
-    cand = _lsh_candidates_from(sigs, tmps).select("doc_a", "doc_b").localCheckpoint()
-    release_checkpoint(*tmps)  # bands blocks are dead once cand exists
-    hint = cand.count() <= _CAND_BC_MAX_PAIRS
+    cand, hint = _cand_checkpoint(_lsh_candidates_from(sigs).select("doc_a", "doc_b"))
     sa, sb = sigs.alias("sa"), sigs.alias("sb")
     agree = sum(
         F.when(F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}"), 1).otherwise(0) for i in range(N_MINHASH)
@@ -2323,40 +2256,6 @@ ORDER BY n_agree
 )
 
 
-def _cc_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """Per-node component labels (node, label=min member id) over a
-    candidate-pair graph — the membership-level sibling of
-    dedup_connected_components' cluster summaries, size-adaptive the
-    same way: driver union-find under _CC_DRIVER_MAX edges,
-    distributed contraction (_cc_propagate) above it."""
-    edges = (
-        pairs.unionByName(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
-        .localCheckpoint()
-    )
-    if edges.count() <= _CC_DRIVER_MAX:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            root = x
-            while parent.setdefault(root, root) != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in edges.collect():
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = sorted((node, find(node)) for node in parent)
-        release_checkpoint(edges)  # labels live on the driver now
-        return spark.createDataFrame(rows, "node bigint, label bigint")
-    labels = _cc_propagate(edges)
-    release_checkpoint(edges)  # fixpoint ran eagerly; only the final
-    return labels  # cycle's checkpoint is live in `labels`
-
-
 def dedup_keeper_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup DECISION step — the output a pipeline actually acts
     on: for every doc in a near-dup cluster (LSH candidates → connected
@@ -2371,8 +2270,7 @@ def dedup_keeper_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. Oracle replays the same fixpoint as a recursive CTE."""
     from pyspark.sql import Window as W
 
-    pairs = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = _cc_labels(spark, pairs)
+    labels = _cc_labels(spark, _lsh_candidates(spark, sf_dir).select("doc_a", "doc_b"))
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "n_chars")
     joined = labels.join(docs, labels.node == docs.doc_id).select(
         F.col("label").alias("cluster"), "doc_id", "n_chars"
@@ -2426,7 +2324,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two vocabulary-scale hash aggregates over the pair list (degree
     per node → nodes per degree); the expensive part — the candidate
     graph — is the same build every dedup consumer shares."""
-    pairs = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _lsh_candidates(spark, sf_dir)
     nodes = pairs.select(F.col("doc_a").alias("node")).unionByName(
         pairs.select(F.col("doc_b").alias("node"))
     )
@@ -2473,37 +2371,12 @@ def lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the verify-stage cost forecast.
 
     All three configs share one signature build (localCheckpoint);
-    each config is a union of band equi-joins — the identical
-    candidate generation the production path uses, never an all-pairs
-    comparison."""
+    each config is the band-stack self-join the production path uses
+    (_lsh_candidates_from), never an all-pairs comparison."""
     sigs = _minhash_signatures(spark, sf_dir).localCheckpoint()
     out = None
     for b, r in _LSH_SWEEP_CONFIGS:
-        bands = sigs.select(
-            "doc_id",
-            *[
-                F.md5(
-                    F.concat(
-                        *sum(
-                            ([F.col(f"mh{r * i + j}"), F.lit("|")] for j in range(r)),
-                            [],
-                        )[:-1]
-                    )
-                ).alias(f"band{i}")
-                for i in range(b)
-            ],
-        )
-        pair_frames = []
-        for i in range(b):
-            a, c = bands.alias("a"), bands.alias("c")
-            pair_frames.append(
-                a.join(c, (F.col(f"a.band{i}") == F.col(f"c.band{i}")) & (F.col("a.doc_id") < F.col("c.doc_id")))
-                .select(F.col("a.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b"))
-            )
-        allp = pair_frames[0]
-        for pf in pair_frames[1:]:
-            allp = allp.unionByName(pf)
-        row = allp.distinct().agg(
+        row = _lsh_candidates_from(sigs, b, r).agg(
             F.lit(f"{b}x{r}").alias("config"),
             F.lit(b).cast("bigint").alias("n_bands"),
             F.lit(r).cast("bigint").alias("rows_per_band"),
@@ -2646,31 +2519,9 @@ def lsh_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    # candidate pairs from the SAME shingle scan (mirrors
-    # lsh_candidate_pairs, minus its independent shingle build);
-    # lane width adapts with the corpus like every band consumer
-    sigs = _minhash_sigs_from(sh, _minhash_wide(sf_dir))
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.col(f"mh{2*b}"), F.lit("|"), F.col(f"mh{2*b+1}"))).alias(f"band{b}")
-            for b in range(N_MINHASH // 2)
-        ],
-    ).localCheckpoint()
-    pair_frames = []
-    for bnd in range(N_MINHASH // 2):
-        l, r = bands.alias("l"), bands.alias("r")
-        pair_frames.append(
-            l.join(
-                r,
-                (F.col(f"l.band{bnd}") == F.col(f"r.band{bnd}"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            ).select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        )
-    cand = pair_frames[0]
-    for pf in pair_frames[1:]:
-        cand = cand.unionByName(pf)
-    cand = cand.distinct()
+    # candidate pairs from the SAME shingle scan; lane width adapts
+    # with the corpus like every band consumer
+    cand = _lsh_candidates_from(_minhash_sigs_from(sh, _minhash_wide(sf_dir))).select("doc_a", "doc_b")
     tp = truth.join(cand, ["doc_a", "doc_b"]).agg(F.count("*").alias("tp"))
     nt = truth.agg(F.count("*").alias("n_truth"))
     nc = cand.agg(F.count("*").alias("n_candidates"))
@@ -2745,7 +2596,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT broadcast-hinted (round-3 advisor: at 100 TB the node count
     exceeds broadcast limits), so it joins as a node-keyed equi-join
     and AQE may still choose broadcast when the measured size allows."""
-    edges = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
+    edges = _lsh_candidates(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
     # undirected adjacency (both directions) for the two-hop walk
     adj = edges.unionByName(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -2887,38 +2738,23 @@ def lsh_band_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate SET, this one grades the candidate ORDERING (can we
     verify high-band pairs first and early-exit?).
 
-    Round 12 (optimization): one shingle definition feeds BOTH the
-    banding funnel (via _lsh_candidates_from) and the truth side —
-    previously lsh_candidate_pairs shingled the corpus a second time
-    inside its own build (and sorted its output, which this consumer
-    never needed). Byte-identical values.
-
-    Round 13 (VERDICT r12 items 1-2 — the 0.37× regression): the r12
-    shape localCheckpointed the full EXPLODED shingle frame (corpus ×
-    k-grams, the widest frame this query ever holds) and the blocks
-    were never released; the driver measured 8.82 s median / 14.4 s
-    max at local[32] vs 2.40 s at 8 cores. Now (a) the corpus-wide
-    frame is never materialized — the signature build consumes the
-    shingle scan streaming, and the truth side checkpoints only the
+    One shingle definition feeds BOTH the banding funnel and the
+    truth side, and the corpus-wide exploded shingle frame is never
+    materialized: the signature build consumes the shingle scan
+    streaming, and the truth side checkpoints only the
     CANDIDATE-DOC-bounded shingles (near-dup mass, not corpus mass;
-    byte-identical per _cand_union_shingles), and (b) every
-    intermediate checkpoint is released the moment `dist`
-    materializes — after that eager 4-row checkpoint the returned
-    plan reads nothing else. Cost: the corpus is shingled twice per
-    run (once into signatures, once into the bounded truth frame)
-    instead of once into a corpus-sized block set — at 100 TB a
-    second streaming scan beats materializing 3× the corpus to
-    executor storage outright."""
+    byte-identical per _cand_union_shingles). Every intermediate
+    checkpoint is released the moment `dist` materializes — after that
+    eager 4-row checkpoint the returned plan reads nothing else. Cost:
+    the corpus is shingled twice per run (once into signatures, once
+    into the bounded truth frame) — at 100 TB a second streaming scan
+    beats materializing 3× the corpus to executor storage."""
     sh = _shingles_df(spark, sf_dir)
-    tmps: list[DataFrame] = []
-    cand = _lsh_candidates_from(
-        _minhash_sigs_from(sh, _minhash_wide(sf_dir)), tmps
-    ).localCheckpoint()
-    hint = cand.count() <= _CAND_BC_MAX_PAIRS
+    cand, hint = _cand_checkpoint(_lsh_candidates_from(_minhash_sigs_from(sh, _minhash_wide(sf_dir))))
     sh_cd = _cand_union_shingles(sh, cand, hint).localCheckpoint()
-    # exact-Jaccard truth CANDIDATE-BOUNDED on both shingle sides
-    # (VERDICT r11 item 1) — the left join from cand below makes the
-    # bounding byte-identical by construction
+    # exact-Jaccard truth CANDIDATE-BOUNDED on both shingle sides — the
+    # left join from cand below makes the bounding byte-identical by
+    # construction
     truth = _cand_bounded_truth(sh_cd, cand, sf_dir, hint).select(
         "doc_a", "doc_b", (F.col("jac") >= 0.5).alias("is_dup")
     )
@@ -2929,7 +2765,7 @@ def lsh_band_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).alias("pos"),
         F.sum(F.when(F.col("is_dup"), 0).otherwise(1)).alias("neg"),
     ).localCheckpoint()
-    release_checkpoint(sh_cd, cand, *tmps)  # dist is the only live frame now
+    release_checkpoint(sh_cd, cand)  # dist is the only live frame now
     p, n = dist.alias("p"), dist.alias("n")
     u = p.crossJoin(F.broadcast(n)).agg(
         F.sum(
@@ -3000,47 +2836,26 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reports pair count, mean absolute estimation error, and both
     means — the storage/accuracy trade table for signature sizing.
 
-    Audited pair set: LSH candidate pairs with exact Jaccard ≥ 0.3
-    (round 12, VERDICT r11 item 1: the code used to audit ALL
-    co-shingled pairs ≥ 0.3 — contradicting this docstring's own
-    "for every LSH candidate pair" contract and paying the full
-    co-shingle pair mass; the entry now computes what it always
-    claimed to, with the oracle updated in lockstep and re-gated).
+    Audited pair set: LSH candidate pairs with exact Jaccard ≥ 0.3.
 
     Lane width: the b=1 bit is taken from the STOCK 16-bit lane by
     definition — b-bit estimation is width-specific (the lane is the
     thing being truncated), so these lanes intentionally do NOT widen
-    with _minhash_wide; only the candidate GENERATION (via
-    lsh_candidate_pairs) adapts (ADVICE r11).
+    with _minhash_wide; only the candidate GENERATION adapts.
 
     Scale: the bit extraction is free (same signature build); the
     exact-Jaccard truth and the bit lookups are candidate-bounded on
-    every side; the report is a 1-row aggregate.
-
-    Round 12 (optimization): one shingle definition feeds the
-    candidate funnel too (adaptive-width signatures via
-    _minhash_sigs_from + _lsh_candidates_from) — previously
-    lsh_candidate_pairs re-shingled the corpus for its own build.
-    Byte-identical values; the width-fixed b-bit lanes below are
-    untouched (they are the thing being audited).
-
-    Round 13 (VERDICT r12 items 1-2): the corpus-wide exploded shingle
-    frame is no longer localCheckpointed — the signature build streams
-    over the scan, and the truth + b-bit-lane sides all feed from ONE
+    every side; the report is a 1-row aggregate. One shingle scan
+    feeds the candidate funnel (streaming, never materialized
+    corpus-wide), and the truth and b-bit-lane sides all read ONE
     checkpointed CANDIDATE-DOC-bounded shingle frame (byte-identical
     per _cand_union_shingles; the per-side semi-filters re-apply on
-    top). The bands checkpoint is released as soon as the candidate
-    list materializes."""
+    top)."""
     sh = _shingles_df(spark, sf_dir)
-    tmps: list[DataFrame] = []
-    cand = (
-        _lsh_candidates_from(_minhash_sigs_from(sh, _minhash_wide(sf_dir)), tmps)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
+    cand, hint = _cand_checkpoint(
+        _lsh_candidates_from(_minhash_sigs_from(sh, _minhash_wide(sf_dir))).select("doc_a", "doc_b")
     )
-    hint = cand.count() <= _CAND_BC_MAX_PAIRS
     sh_cd = _cand_union_shingles(sh, cand, hint).localCheckpoint()
-    release_checkpoint(*tmps)  # bands blocks are dead once cand exists
     # full 16-bit lanes AND their low bits from one aggregate, built
     # only for docs that appear in a candidate pair
     lanes = lambda side: (  # noqa: E731

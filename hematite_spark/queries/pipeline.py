@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from hematite_spark.io import load_table
 from hematite_spark.functions import norm_text as _norm_text
-from hematite_spark.queries.dedup import dedup_connected_components
+from hematite_spark.queries.dedup import _lsh_candidates, dedup_connected_components
 from hematite_spark.queries.sampling import _DUCK_HASH_PCT, _hash_pct
 
 KEEP_LANGS = ("en", "de", "fr")
@@ -54,9 +54,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survivors, so clustering precedes filtering by design). The LSH
     # candidate graph is built ONCE (localCheckpoint) and shared by
     # the clustering and the membership derivation.
-    from hematite_spark.queries.dedup import lsh_candidate_pairs
-
-    pairs = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
+    pairs = _lsh_candidates(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
     clusters = dedup_connected_components(spark, sf_dir, pairs=pairs)
     # members to drop = every doc in a cluster except the keeper
     drop = (

@@ -670,11 +670,15 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: the graph tables (edges, out-weights, ranks) are
     vocabulary-sized and partition on the token key; every iteration
     is one shuffle join + one map-side-combined aggregate, and the
-    iteration count is FIXED (5) so the plan is a finite unrolled
-    dataflow — no driver-side convergence loop, no lineage blowup
-    needing checkpoints. The oracle unrolls the same 5 iterations as
-    nested CTEs, proving the recursion, not just the last hop. Ranks
-    round to 6 only at the end."""
+    iteration count is FIXED (5) — no driver-side convergence loop.
+    The loop-invariant graph tables are checkpointed once and every
+    superstep's ranks are checkpointed too: unrolled, iteration i's
+    plan would nest i joins deep and optimizer time, not data, would
+    dominate; each checkpoint also cuts the fault-tolerance lineage
+    between supersteps. The previous superstep's checkpoint is
+    released as soon as the next one materializes. The oracle unrolls
+    the same 5 iterations as nested CTEs, proving the recursion, not
+    just the last hop. Ranks round to 6 only at the end."""
     docs = load_table(spark, "documents", sf_dir)
     d = docs.select(F.split(F.lower(_norm_text()), " ").alias("w")).where(F.size("w") >= 2)
     bgf = d.select(
@@ -724,9 +728,9 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i < 4:
             ranks = ranks.localCheckpoint()
             # iteration i-1's rank blocks are dead the moment this
-            # checkpoint materializes (round-13 lifecycle hygiene —
-            # at 100 TB a 5-superstep chain otherwise retains 4 dead
-            # vocabulary-sized block sets until the session GCs)
+            # checkpoint materializes (at 100 TB a 5-superstep chain
+            # otherwise retains 4 dead vocabulary-sized block sets
+            # until the session GCs); None on the first superstep
             release_checkpoint(prev_cp)
             prev_cp = ranks
     return (

@@ -395,7 +395,11 @@ class EventStore:
     def _snapshot_ranges(self, user_id: str, stream_id: str) -> list[tuple[str, int, int]]:
         """A copy of the stream's file index after one listing (the
         read-path entry; mirrors the reference's read-under-stream-
-        mutex, server.rs:168-175, without holding the lock during I/O)."""
+        mutex, server.rs:168-175, without holding the lock during I/O).
+        A stream with no directory reads as empty without a lock or an
+        index entry, so reads of made-up stream ids leave no state."""
+        if not os.path.isdir(self._stream_dir(user_id, stream_id)):
+            return []
         with self._lock(user_id, stream_id):
             return list(self._file_ranges(user_id, stream_id))
 
@@ -696,6 +700,8 @@ class EventStore:
         Returns False for unknown streams, like the reference."""
         key = (user_id, stream_id)
         d = self._stream_dir(*key)
+        if not os.path.isdir(d):
+            return False
         with self._lock(*key):
             if not os.path.isdir(d):
                 return False

@@ -292,6 +292,81 @@ def test_cc_pointer_jumping_handles_deep_paths(spark, monkeypatch):
     assert calls <= 40, f"{calls} star rounds for a 200-node path"
 
 
+# Every catalog entry that rides the LSH candidate kernel or the CC
+# labeller: their size gates read the checkpoint's own row count.
+_LSH_FAMILY = (
+    "dedup_lsh_candidates",
+    "dedup_lsh_verified",
+    "dedup_connected_components",
+    "dedup_incremental",
+    "dedup_cluster_density",
+    "dedup_keeper_selection",
+    "graph_degree_distribution",
+    "graph_link_prediction",
+    "minhash_jaccard_audit",
+    "minhash_bbit_estimate",
+    "lsh_precision_recall",
+    "lsh_band_auc",
+    "lsh_parameter_sweep",
+    "corpus_pipeline",
+    "entity_resolution_pipeline",
+)
+
+
+def test_lsh_family_runs_no_count_job(spark, monkeypatch):
+    """The broadcast and driver-union-find gates count their frame
+    through an Observation on the checkpoint's own job: no entry of
+    the LSH / connected-components family calls DataFrame.count, at
+    build time or in its noop write."""
+    def no_count(self):
+        raise AssertionError("DataFrame.count called")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    for name in _LSH_FAMILY:
+        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+
+def test_lsh_band_join_is_one_reused_self_join(spark):
+    """The banding funnel is ONE self-join of the band stack on
+    (band, h): after a noop write, the final plan holds exactly one
+    join, keyed on (band, h), and one of its sides is a ReusedExchange
+    of an exchange on the other side — the band stack is computed once
+    without a checkpoint."""
+    import re
+
+    from hematite_spark.queries import dedup
+
+    df = dedup._lsh_candidates_from(dedup._minhash_signatures(spark, SF_DIR))
+    df.write.format("noop").mode("overwrite").save()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = runs.apply(runs.size() - 1).physicalPlanDescription()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    joins = re.findall(r"\b\w+Join\b[^(\n]*\((\d+)\)", final)
+    assert len(joins) == 1, final
+    details = plan.split(f"\n({joins[0]}) ", 1)[1]
+    assert re.match(r"\w+Join.*\nLeft keys \[2\]: \[band#\d+, h#\d+\]", details), details[:300]
+    reused = re.findall(r"ReusedExchange \[Reuses operator id: (\d+)\]", plan)
+    assert reused and f"Exchange ({reused[0]})" in final, final
+
+
+def test_release_checkpoint_warns_once_on_failure(spark, monkeypatch):
+    """A release whose RDD accessor fails (here: a frame that is no
+    checkpoint) is not silent: one RuntimeWarning per process. None is
+    skipped without a warning."""
+    import warnings as _w
+
+    from hematite_spark.queries import _shared
+
+    monkeypatch.setattr(_shared, "_RELEASE_WARNED", False, raising=False)
+    with _w.catch_warnings(record=True) as seen:
+        _w.simplefilter("always")
+        _shared.release_checkpoint(None)
+        _shared.release_checkpoint(spark.range(3))
+        _shared.release_checkpoint(spark.range(3))
+    assert [w.category for w in seen] == [RuntimeWarning]
+
+
 def test_stats_cut_internal_path_taken_on_classic_spark(spark):
     """_stats_cut's whole point is dropping the checkpoint's origin
     stats via SparkSession.internalCreateDataFrame (a classic-mode
@@ -1894,9 +1969,11 @@ def test_cand_broadcast_gate_fallback(spark, duck, monkeypatch):
     # semi-filter hints of _cand_bounded_truth (each filtered side
     # appears twice in the plan: sizes + pair join → 4 hints) must
     # vanish when the gate shuts
-    cand = dedup.lsh_candidate_pairs(spark, SF_DIR).select("doc_a", "doc_b").localCheckpoint()
+    cand, hint = dedup._cand_checkpoint(
+        dedup.lsh_candidate_pairs(spark, SF_DIR).select("doc_a", "doc_b")
+    )
     sh = dedup._shingles_df(spark, SF_DIR).localCheckpoint()
-    assert hints(dedup._cand_bounded_truth(sh, cand, SF_DIR)) == 4
+    assert hints(dedup._cand_bounded_truth(sh, cand, SF_DIR, hint)) == 4
     # whole-entry hint counts with the gate OPEN (lsh_band_auc is
     # omitted here: its truth side hides behind the eager dist
     # localCheckpoint, so the final plan shows only its two O(4)-row
@@ -1910,7 +1987,8 @@ def test_cand_broadcast_gate_fallback(spark, duck, monkeypatch):
     for fn, _sql, n_open in cases:
         assert hints(fn(spark, SF_DIR)) == n_open, f"{fn.__name__}: gate open but no hint"
     monkeypatch.setattr(dedup, "_CAND_BC_MAX_PAIRS", -1)  # force fallback
-    assert hints(dedup._cand_bounded_truth(sh, cand, SF_DIR)) == 0
+    _, hint = dedup._cand_checkpoint(cand)
+    assert hints(dedup._cand_bounded_truth(sh, cand, SF_DIR, hint)) == 0
     for fn, sql, _n_open in cases + ((dedup.lsh_band_auc, dedup.LSH_AUC_SQL, None),):
         df = fn(spark, SF_DIR)
         if _n_open is not None:

@@ -181,6 +181,27 @@ def test_delete_stream(store):
         store.get_event(U, S, 0)
 
 
+def test_missing_stream_calls_leave_no_state(store):
+    """Reads and deletes of streams that have no directory leave the
+    per-stream lock, index and (source, id) maps as they were: a client
+    asking for made-up stream ids cannot grow the store's memory."""
+    store.append(U, S, minimal_event())
+    store.query(U, S)
+    sizes = lambda: (len(store._locks), len(store._ranges), len(store._ids))  # noqa: E731
+    before = sizes()
+    calls = (
+        lambda s: store.query(U, s) == [],
+        lambda s: store.revision(U, s) == 0,
+        lambda s: store.delete_stream(U, s) is False,
+        lambda s: pytest.raises(StreamNotFound, store.get_event, U, s, 0) is not None,
+        lambda s: pytest.raises(StreamNotFound, store.get_stream, U, s) is not None,
+        lambda s: pytest.raises(StreamNotFound, store.read_df, U, s) is not None,
+    )
+    for i in range(1000):
+        assert calls[i % len(calls)](f"missing-{i}")
+    assert sizes() == before
+
+
 def test_tenant_isolation(store):
     store.append("alice", S, minimal_event("a"))
     store.append("bob", S, minimal_event("b"))
